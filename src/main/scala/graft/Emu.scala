@@ -24,8 +24,22 @@ import scala.util.Random
 object Emu {
 
   private val keyRe = """\$RAND\(([A-Za-z_]+)\)""".r
-  private def keysOf(templates: Seq[String]): Seq[String] =
+  /** The distinct `$RAND(key)` keys the templates draw from. */
+  private[graft] def keysOf(templates: Seq[String]): Seq[String] =
     templates.flatMap(t => keyRe.findAllMatchIn(t).map(_.group(1))).distinct
+
+  /** Substitute each `$RAND(key)` with a value drawn from `pools(key)`:
+    * numeric values stay bare, strings get quoted; quoteReplacement so
+    * '$'/'\' in data values aren't read as group references. */
+  private[graft] def instantiate(t: String, pools: Map[String, Array[String]],
+                                 rand: Random): String =
+    keyRe.replaceAllIn(t, m => {
+      val pool = pools(m.group(1))
+      val v = pool(rand.nextInt(pool.length))
+      scala.util.matching.Regex.quoteReplacement(
+        if (v.matches("-?[0-9.]+")) v
+        else "'" + v.replace("'", "\\'") + "'")
+    })
 
   val DefaultTemplates: Seq[String] = Seq(
     "g.V().has('nationkey', eq($RAND(nationkey))).count()",
@@ -79,24 +93,13 @@ object Emu {
         .distinct().limit(1000).collect().map(_.get(0).toString)
     }.toMap
 
-    def instantiate(t: String): String =
-      keyRe.replaceAllIn(t, m => {
-        val pool = pools(m.group(1))
-        val v = pool(rand.nextInt(pool.length))
-        // numeric values stay bare; strings get quoted; quoteReplacement
-        // so '$'/'\' in data values aren't read as group references
-        scala.util.matching.Regex.quoteReplacement(
-          if (v.matches("-?[0-9.]+")) v
-          else "'" + v.replace("'", "\\'") + "'")
-      })
-
     val latencies = new ConcurrentLinkedQueue[Double]()
     val errors = new AtomicInteger(0)
     val queriesRun = new AtomicInteger(0)
     val done = new CountDownLatch(concurrency)
     // pre-instantiate the full workload deterministically
     val workload = (0 until iterations).map(i =>
-      instantiate(templates(i % templates.length)))
+      instantiate(templates(i % templates.length), pools, rand))
     val cursor = new AtomicInteger(0)
 
     val t0 = System.nanoTime()

@@ -146,9 +146,7 @@ object NetEmu {
     val templates =
       if (args.length > 4) args.drop(4).toSeq else Emu.DefaultTemplates
 
-    val keyRe = """\$RAND\(([A-Za-z_]+)\)""".r
-    val keys = templates.flatMap(t =>
-      keyRe.findAllMatchIn(t).map(_.group(1))).distinct
+    val keys = Emu.keysOf(templates)
 
     def roundTrip(in: BufferedReader, out: PrintWriter,
                   q: String): (Seq[String], Boolean) = {
@@ -186,16 +184,8 @@ object NetEmu {
     cout.println("exit"); cout.flush(); ctl.close()
 
     val rand = new scala.util.Random(42)
-    def instantiate(t: String): String =
-      keyRe.replaceAllIn(t, m => {
-        val pool = pools(m.group(1))
-        val v = pool(rand.nextInt(pool.length))
-        scala.util.matching.Regex.quoteReplacement(
-          if (v.matches("-?[0-9.]+")) v
-          else "'" + v.replace("'", "\\'") + "'")
-      })
     val workload = (0 until iterations).map(i =>
-      instantiate(templates(i % templates.length)))
+      Emu.instantiate(templates(i % templates.length), pools, rand))
 
     val latencies = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
     val errors = new AtomicInteger(0)

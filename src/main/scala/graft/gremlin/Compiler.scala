@@ -69,16 +69,72 @@ object Compiler {
       // that can fan out or re-project the value (hops, values(),
       // select(), union(), barriers). Lets the per-value branch-filter
       // fast path skip its distinct shuffle.
-      distinctVal: Boolean = false) {
+      distinctVal: Boolean = false,
+      // light lane (APC): an upper bound on this stream's rows, known
+      // for an index-seeded frontier and carried step by step
+      // ([[laneBound]]); None off the lane. Joins broadcast the
+      // traverser side while `bound × row width` fits the broadcast
+      // threshold ([[traverser]]).
+      bound: Option[Long] = None,
+      // per-(edge label, direction) max degrees: the hop multiplier
+      degrees: Option[Degrees] = None) {
     /** Columns that must survive every transformation. */
     def auxCols: Seq[String] =
       history.keys.map(h => s"__as_$h").toSeq ++
         groupCol.toSeq ++ ordering.map(_._1)
   }
 
+  /** `light`: the query compiled on the light lane — index-seeded,
+    * every join broadcasts the traverser side, and no step's rows
+    * depend on partition order — so it may run in a narrow AQE-off
+    * session ([[Graft]]). */
   final case class Result(df: DataFrame, kind: Kind,
                           ordering: Seq[(String, Boolean)],
-                          sideEffects: Map[String, (DataFrame, Kind)])
+                          sideEffects: Map[String, (DataFrame, Kind)],
+                          light: Boolean = false)
+
+  /** Max out-/in-degree per edge label over the whole graph — the light
+    * lane's hop multiplier. Exact maxima, so `bound × hop` is an upper
+    * bound on a hop's output (the IndexStore never-underestimate rule). */
+  final case class Degrees(max: Map[(String, Boolean), Long]) {
+    /** Upper bound on the edges one vertex reaches along `labels` (every
+      * label when empty) in direction `dir`. */
+    def hop(dir: Step.Dir, labels: Seq[String]): Long = {
+      def side(out: Boolean): Long =
+        (if (labels.nonEmpty) labels.distinct.map(l => (l, out))
+         else max.keys.filter(_._2 == out))
+          .map(max.getOrElse(_, 0L)).sum
+      dir match {
+        case Step.Out  => side(out = true)
+        case Step.In   => side(out = false)
+        case Step.Both => side(out = true) + side(out = false)
+      }
+    }
+  }
+
+  object Degrees {
+    /** ONE aggregation job over the edge table: per (label, direction,
+      * vertex) degree, then the max per (label, direction). Runs in the
+      * parent-width narrow session, where the two exchanges are stages
+      * of one job (AQE would run each as a job of its own). Meant for
+      * DDL time — never call it from compile. */
+    def of(graph: GraphStore): Degrees = {
+      val spark = graph.edges.sparkSession
+      def ends(out: Boolean, v: String): DataFrame = graph.edges
+        .select(col("label"), lit(out).as("out"), col(v).as("v"))
+      val maxes = ends(out = true, "src").unionByName(ends(out = false, "dst"))
+        .groupBy("label", "out", "v").count()
+        .groupBy("label", "out").agg(max(col("count")))
+      val narrow = graft.NarrowSession(spark,
+        spark.sessionState.conf.numShufflePartitions)
+      Degrees(org.apache.spark.sql.SessionRebind(maxes, narrow).collect()
+        .map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2)).toMap)
+    }
+  }
+
+  /** A light-lane compile hit a step or join the lane cannot carry; the
+    * query recompiles on the plain path. */
+  private object LaneEnd extends scala.util.control.ControlThrowable
 
   private var aliasCounter = 0
   private def freshAlias(prefix: String): String = synchronized {
@@ -101,29 +157,43 @@ object Compiler {
 
   /** Compile with a pre-computed vertex-id frontier (`id: LONG`) —
     * used by the posting-list index fold, the Spark analogue of
-    * InitWithIndex (`expert/init_expert.hpp:199-234`). */
+    * InitWithIndex (`expert/init_expert.hpp:199-234`). `bound` (an
+    * upper bound on the frontier's rows, from the fold's count map)
+    * tries the light lane first. */
   def compileSeeded(graph: GraphStore, frontier: DataFrame,
-                    steps: List[Step]): Result = {
+                    steps: List[Step], bound: Option[Long] = None,
+                    degrees: Option[Degrees] = None): Result =
     // posting lists hold one row per element (intersections/unions of
     // per-value postings of one key stay element-unique)
-    val init = State(frontier.select(col("id").as("__val")), VertexKind,
+    seeded(graph, State(frontier.select(col("id").as("__val")), VertexKind,
       attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil, distinctVal = true)
-    val out = steps.foldLeft(init)((s, step) => apply(graph, s, step))
-    Result(out.df, out.kind, out.ordering, out.sideEffects)
-  }
+      Map.empty, None, Nil, distinctVal = true), steps, bound, degrees)
 
   /** Compile with a pre-computed edge frontier (`src, dst, label`) —
     * the edge side of InitWithIndex (`expert/init_expert.hpp:199-234`
     * serves both element types). */
   def compileSeededEdges(graph: GraphStore, frontier: DataFrame,
-                         steps: List[Step]): Result = {
-    val init = State(frontier.select(edgeStruct().as("__val")), EdgeKind,
+                         steps: List[Step], bound: Option[Long] = None,
+                         degrees: Option[Degrees] = None): Result =
+    seeded(graph, State(frontier.select(edgeStruct().as("__val")), EdgeKind,
       attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil,
-      distinctVal = true)
-    val out = steps.foldLeft(init)((s, step) => apply(graph, s, step))
-    Result(out.df, out.kind, out.ordering, out.sideEffects)
+      Map.empty, None, Nil, distinctVal = true), steps, bound, degrees)
+
+  /** The light lane first (when a bound is known), else — or when the
+    * lane ends mid-query — the plain compile. A lane attempt is pure
+    * driver work (it ends BEFORE any eager step), so the retry runs no
+    * job, and a heavy query's plan is exactly the plain path's. */
+  private def seeded(graph: GraphStore, init: State, steps: List[Step],
+                     bound: Option[Long], degrees: Option[Degrees]): Result = {
+    def run(s0: State): State =
+      steps.foldLeft(s0)((s, step) => apply(graph, s, step))
+    val lane =
+      if (bound.isEmpty) None
+      else try Some(run(init.copy(bound = bound, degrees = degrees)))
+      catch { case LaneEnd => None }
+    val out = lane.getOrElse(run(init))
+    Result(out.df, out.kind, out.ordering, out.sideEffects,
+      light = lane.isDefined)
   }
 
   /** Compile a sub-traversal from an existing frontier. */
@@ -146,14 +216,34 @@ object Compiler {
     struct(col(s"${prefix}src").as("src"), col(s"${prefix}dst").as("dst"),
       col(s"${prefix}label").as("label"))
 
+  /** The traverser side of a join. On the light lane it is hinted for
+    * broadcast when `bound × row width` fits the graph session's
+    * `spark.sql.autoBroadcastJoinThreshold` — the planner would
+    * otherwise broadcast the cached graph table, since it estimates a
+    * join's output as the product of its inputs. A lane join that does
+    * not fit ends the lane. */
+  private def traverser(graph: GraphStore, s: State): DataFrame =
+    s.bound match {
+      case None => s.df
+      case Some(b) =>
+        val threshold = graph.vertices.sparkSession.sessionState.conf
+          .autoBroadcastJoinThreshold
+        // Spark's own row-size estimate: 8 bytes of row overhead + the
+        // columns' default sizes
+        val width = 8L + s.df.schema.defaultSize
+        if (threshold > 0 && b <= threshold / width) broadcast(s.df)
+        else throw LaneEnd
+    }
+
   /** Re-attach element property columns (join on id) if absent. */
   private def ensureAttached(graph: GraphStore, s: State): State = {
     if (s.attached) return s
+    val left = traverser(graph, s)
     s.kind match {
       case VertexKind =>
         val a = freshAlias("__v")
         val v = graph.vertices.alias(a)
-        val joined = s.df.join(v, s.df("__val") === col(s"$a.id"))
+        val joined = left.join(v, left("__val") === col(s"$a.id"))
         val keep = col("__val") +: s.auxCols.map(col) ++:
           (col(s"$a.label").as("label") +:
             graph.vertexKeys.map(k => col(s"$a.$k").as(k)))
@@ -161,12 +251,12 @@ object Compiler {
       case EdgeKind =>
         val a = freshAlias("__e")
         val e = graph.edges.alias(a)
-        val joined = s.df.join(e,
-          s.df("__val").getField("src") === col(s"$a.src") &&
-          s.df("__val").getField("dst") === col(s"$a.dst") &&
+        val joined = left.join(e,
+          left("__val").getField("src") === col(s"$a.src") &&
+          left("__val").getField("dst") === col(s"$a.dst") &&
           // label too: stores loaded from text can hold parallel edges
           // differing only by label
-          s.df("__val").getField("label") === col(s"$a.label"))
+          left("__val").getField("label") === col(s"$a.label"))
         val keep = col("__val") +: s.auxCols.map(col) ++:
           graph.edgeKeys.map(k => col(s"$a.$k").as(k))
         s.copy(df = joined.select(keep: _*), attached = true)
@@ -213,7 +303,43 @@ object Compiler {
       history = Map.empty, ordering = Nil, distinctVal = false)
 
   // ------------------------------------------------------------------
+  /** One step; on the light lane the step's output bound is decided
+    * first, so a step the lane cannot carry ends it before running. */
   private def apply(graph: GraphStore, s: State, step: Step): State = {
+    val bound = s.bound.map(b => laneBound(s, step, b).getOrElse(throw LaneEnd))
+    applyStep(graph, s, step).copy(bound = bound)
+  }
+
+  /** The light lane's row bound after `step`, from the bound `b` before
+    * it; None ends the lane. Filters and per-traverser maps (at most one
+    * row out per row in) keep it, scalar aggregates emit one row, hops
+    * multiply it by the max degree, and an order-free dedup keeps it.
+    * Everything else ends the lane: steps whose rows depend on partition
+    * order, which the narrow session changes (limit/range, coin, order
+    * with its ties, a dedup that drops history or sort keys — it keeps
+    * an arbitrary row per key), steps that join without the hint
+    * (side-effect reads, branch filters), and the composite and eager
+    * steps (union, repeat). Edge attach keeps the bound: an edge
+    * IS its (src, dst, label) (see GraphStore). */
+  private def laneBound(s: State, step: Step, b: Long): Option[Long] = {
+    import Step._
+    def times(k: Long): Option[Long] =
+      if (k != 0 && b > Long.MaxValue / k) None else Some(b * k)
+    step match {
+      case _: Has | _: HasKey | _: HasValue | _: HasLabel | _: Is |
+           _: WherePred | _: WhereHistory | _: As | _: Label | _: Select |
+           _: PathStep | _: Aggregate | Values(Seq(_)) => Some(b)
+      case EtoV(Both) => times(2)
+      case _: EtoV => Some(b)
+      case VtoV(dir, labels) => s.degrees.flatMap(d => times(d.hop(dir, labels)))
+      case VtoE(dir, labels) => s.degrees.flatMap(d => times(d.hop(dir, labels)))
+      case _: Count | _: MathStep if s.groupCol.isEmpty => Some(1L)
+      case Dedup(Seq()) if s.auxCols.isEmpty => Some(b)
+      case _ => None
+    }
+  }
+
+  private def applyStep(graph: GraphStore, s: State, step: Step): State = {
     import Step._
     step match {
       case _: TimesMarker | _: UntilMarker | EmitMarker =>
@@ -853,7 +979,7 @@ object Compiler {
   /** out/in/both × (V→V | V→E): the only mandatory shuffle in the
     * reference (`send_remote`, parser.cpp:1414) — here a plain equi-join
     * that Catalyst/AQE turns into broadcast or shuffle join as sizes
-    * dictate. */
+    * dictate (on the light lane: the traverser side broadcast). */
   private def traverse(graph: GraphStore, s0: State, dir: Step.Dir,
                        labels: Seq[String], emitEdge: Boolean): State = {
     import Step._
@@ -864,9 +990,10 @@ object Compiler {
     var e = graph.edges.select(col("src"), col("dst"), col("label"))
     if (labels.nonEmpty) e = e.filter(col("label").isin(labels: _*))
     val ea = e.alias(a)
+    val left = traverser(graph, s)
 
     def hop(joinOn: String, emit: String): DataFrame = {
-      val joined = s.df.join(ea, s.df("__val") === col(s"$a.$joinOn"))
+      val joined = left.join(ea, left("__val") === col(s"$a.$joinOn"))
       val newVal =
         if (emitEdge) struct(col(s"$a.src").as("src"),
           col(s"$a.dst").as("dst"), col(s"$a.label").as("label"))

@@ -1,7 +1,8 @@
 package graft.gremlin
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SessionRebind}
 import org.apache.spark.sql.functions._
+import graft.NarrowSession
 import graft.sources.GraphStore
 
 /**
@@ -36,6 +37,12 @@ final case class Graft(graph: GraphStore) {
     * `stealing`, …) are recorded but subsumed by Catalyst/AQE. */
   @volatile var config: Map[String, String] = Map.empty
 
+  /** Per-(edge label, direction) max degrees — the light lane's hop
+    * multiplier. ONE aggregation job at the first `BuildIndex` DDL
+    * (indexes are what seed the lane), never at compile. */
+  @volatile private var degrees: Option[Compiler.Degrees] = None
+  private val degreesLock = new Object
+
   /** A toggle is on unless explicitly set to false/0 (reference default:
     * all optimizations enabled, `utils/config.hpp`). */
   private def enabled(key: String): Boolean =
@@ -52,6 +59,9 @@ final case class Graft(graph: GraphStore) {
     case BuildIndexRe(ve, key) =>
       val isV = ve.equalsIgnoreCase("V")
       index.build(graph, isV, key)
+      if (degrees.isEmpty) degreesLock.synchronized {
+        if (degrees.isEmpty) degrees = Some(Compiler.Degrees.of(graph))
+      }
       Some(s"Index built for ${ve.toUpperCase}.$key")
     case SetConfigRe(k, v) =>
       config += k -> v
@@ -66,20 +76,23 @@ final case class Graft(graph: GraphStore) {
     * and least-selective eviction (`core/parser.cpp:991-1081`), for
     * vertices AND edges (`expert/init_expert.hpp:199-234`). Gating is
     * pure driver arithmetic over the build-time count map: compiling
-    * never runs a Spark job. */
+    * never runs a Spark job. The fold's upper bound on the seeded
+    * frontier opens the light lane (APC, see [[finish]]). */
   def compile(query: String): Compiler.Result = {
     val steps = plannedSteps(query)
     steps match {
       case Step.V(Seq()) :: rest if enabled("indexing") =>
         foldIndex(isVertex = true, rest) match {
-          case Some((frontier, remaining)) =>
-            Compiler.compileSeeded(graph, frontier, remaining)
+          case Some(((frontier, bound), remaining)) =>
+            Compiler.compileSeeded(graph, frontier, remaining, Some(bound),
+              degrees)
           case scala.None => Compiler.compile(graph, steps)
         }
       case Step.E() :: rest if enabled("indexing") =>
         foldIndex(isVertex = false, rest) match {
-          case Some((frontier, remaining)) =>
-            Compiler.compileSeededEdges(graph, frontier, remaining)
+          case Some(((frontier, bound), remaining)) =>
+            Compiler.compileSeededEdges(graph, frontier, remaining,
+              Some(bound), degrees)
           case scala.None => Compiler.compile(graph, steps)
         }
       case _ => Compiler.compile(graph, steps)
@@ -106,9 +119,12 @@ final case class Graft(graph: GraphStore) {
     * evicted back to ordinary filter steps (`index_ratio = 3`,
     * `core/parser.hpp:43-46`). `hasLabel` folds as a WITHIN predicate
     * on the label key (`parser.cpp:1060-1081`) — selectivity-gated but
-    * outside the minCount bookkeeping, like the reference. */
+    * outside the minCount bookkeeping, like the reference. Returns the
+    * seeded frontier with an upper bound on its rows (the smallest
+    * folded count: the frontier intersects the folded postings), and
+    * the steps left to compile. */
   private[gremlin] def foldIndex(isVertex: Boolean, rest: List[Step])
-      : Option[(org.apache.spark.sql.DataFrame, List[Step])] = {
+      : Option[((DataFrame, Long), List[Step])] = {
     val IndexRatio = 3L
     val isLeading: Step => Boolean = {
       case _: Step.Has | _: Step.HasKey | _: Step.HasLabel |
@@ -146,7 +162,7 @@ final case class Graft(graph: GraphStore) {
       case step @ Step.HasLabel(labels) =>
         val pred = Pred.Within(labels.map(Lit.S))
         index.admissibleCount(isVertex, "label", pred) match {
-          case Some(_) => folded :+= (("label", pred, 0L, false))
+          case Some(n) => folded :+= (("label", pred, n, false))
           case scala.None => kept :+= step
         }
       case step => kept :+= step
@@ -158,7 +174,7 @@ final case class Graft(graph: GraphStore) {
       val frontier = folded
         .map(f => index.frontier(isVertex, f._1, f._2))
         .reduce((a, b) => a.join(b, joinCols, "left_semi"))
-      Some((frontier, (kept ++ tail).toList))
+      Some(((frontier, folded.map(_._3).min), (kept ++ tail).toList))
     }
   }
 
@@ -166,9 +182,15 @@ final case class Graft(graph: GraphStore) {
     * columns mapped to stable names). */
   def df(query: String): DataFrame = finish(compile(query))
 
+  /** APC's "light stays single-threaded": a light query's finished plan
+    * is re-planned in the graph session's width-1 AQE-off child — one
+    * driver job per query plus one per broadcast, instead of one per
+    * exchange under AQE. The cached graph and postings are found
+    * through the shared CacheManager; nothing is re-cached. Heavy
+    * queries keep the parent session. */
   private def finish(r: Compiler.Result): DataFrame = {
     val ordered = Compiler.applyOrdering(r.df, r.ordering)
-    r.kind match {
+    val out = r.kind match {
       case VertexKind => ordered.select(col("__val").as("id"))
       case EdgeKind => ordered.select(
         col("__val").getField("src").as("src"),
@@ -182,6 +204,9 @@ final case class Graft(graph: GraphStore) {
         case _ => ordered.select(col("__val").as("value"))
       }
     }
+    if (r.light)
+      SessionRebind(out, NarrowSession(graph.vertices.sparkSession, 1))
+    else out
   }
 
   /** Console-parity output: one "=>v" string per result row, like the
@@ -189,8 +214,7 @@ final case class Graft(graph: GraphStore) {
     * status line. Collects to the driver — final-result sized only. */
   def strings(query: String): Seq[String] = {
     ddl(query).foreach(status => return Seq(status))
-    val r = compile(query)
-    val out = finish(r)
+    val out = df(query)
     val rows = out.collect()
     val isGroup = out.columns.headOption.contains("key")
     rows.toSeq.map { row =>

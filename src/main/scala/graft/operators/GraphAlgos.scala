@@ -815,18 +815,15 @@ object GraphAlgos {
     // re-optimization is pure overhead on a remainder this small
     // (measured at sf0.1: ~100 AQE stage jobs ≈ 55 ms each for 32
     // flood rounds over 2000 edges; static plans run the same rounds
-    // as ~20 whole-job submissions). newSession() isolates the conf —
-    // concurrent queries under Server/Emu never see the narrowed
-    // width or the AQE toggle (the r10 advice contract), and the
-    // child shares the SparkContext, so checkpointed RDDs and the
+    // as ~20 whole-job submissions). The child (graft.NarrowSession)
+    // isolates the conf — concurrent queries under Server/Emu never see
+    // the narrowed width or the AQE toggle (the r10 advice contract) —
+    // and shares the SparkContext, so checkpointed RDDs and the
     // returned DataFrame work across the boundary.
     val (loopSession, e0) =
       if (n0 <= SccSmallEdges) {
-        val child = spark.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", width.toString)
-        child.conf.set("spark.sql.adaptive.enabled", "false")
-        (child,
-          child.createDataFrame(e00.rdd, e00.schema).localCheckpoint())
+        val child = graft.NarrowSession(spark, width)
+        (child, StateStore.rebase(e00, child).localCheckpoint())
       } else (spark, e00)
     sccLoop(loopSession, e0, n0, width, maxOuter,
       maxFlood, requireConverged, seqThreshold)
@@ -1068,11 +1065,9 @@ object GraphAlgos {
         // a ≤SccSmallEdges remainder
         if (!isolated && edgeCount <= SccSmallEdges) {
           isolated = true
-          val child = sess.newSession()
-          child.conf.set("spark.sql.shuffle.partitions", width.toString)
-          child.conf.set("spark.sql.adaptive.enabled", "false")
+          val child = graft.NarrowSession(sess, width)
           def mv(df: DataFrame): DataFrame =
-            child.createDataFrame(df.rdd, df.schema).localCheckpoint()
+            StateStore.rebase(df, child).localCheckpoint()
           edges = mv(edges)
           rem = mv(rem)
           if (out != null) out = mv(out)

@@ -24,50 +24,22 @@ object StateStore {
 
   /** MAINTENANCE session for the store's eager bookkeeping jobs (state
     * table writes, compaction reads/stages, model fits run inside a
-    * rewrite): the parent session's conf with AQE OFF. Every one of
-    * these plans is 1-3 STATIC stages — a checkpoint/path-read source,
-    * at most one explicit-width repartition, a write or collect — so
-    * AQE contributes nothing (its coalescing is disabled on
-    * explicit-width repartitions anyway) while charging one extra
-    * driver JOB per exchange (stage materialization) plus per-stage
-    * re-optimization, which at gate scale IS the latency (the SCC
-    * small-mode lesson, measured there at ~55 ms/stage; an ingest's
-    * repartition+write runs as two jobs under AQE, one without).
-    * Isolation per the documented invariant: `newSession()` so no
-    * session-global conf mutation can leak into concurrent queries;
-    * the child shares the SparkContext, so checkpointed RDDs,
-    * broadcasts and returned frames cross the boundary. Parent-session
-    * RESULTS are unchanged: the written table CONTENTS are a pure
-    * function of the input multiset (hive dirs split by value; all
-    * state-table readers are order-free by the store's contracts), so
-    * only job count and intra-file row order move. Keyed weakly by the
-    * parent so per-connection serving sessions don't accumulate. */
-  private val maintSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-  private[graft] def maint(spark: SparkSession): SparkSession = {
-    val hit = maintSessions.get(spark)
-    if (hit != null) hit
-    else {
-      val c = spark.newSession()
-      c.conf.set("spark.sql.shuffle.partitions",
-        spark.sessionState.conf.numShufflePartitions.toString)
-      c.conf.set("spark.sql.session.timeZone",
-        spark.sessionState.conf.sessionLocalTimeZone)
-      c.conf.set("spark.sql.adaptive.enabled", "false")
-      // state tables are hive-bucketed at a BOUNDED fan (the ledger
-      // sizing, default 64 dirs): listing them through the default
-      // 32-path threshold launches a distributed file-listing JOB per
-      // read (~0.15 s at gate scale for a layout the driver lists in
-      // ~ms). 256 covers the store's own layouts; an archive-scale
-      // state beyond it still gets the distributed listing.
-      c.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "256")
-      graft.functions.VectorExpressions.register(c)
-      maintSessions.put(spark, c)
-      c
-    }
-  }
+    * rewrite): the parent's width with AQE OFF ([[graft.NarrowSession]]).
+    * Every one of these plans is 1-3 STATIC stages — a
+    * checkpoint/path-read source, at most one explicit-width
+    * repartition, a write or collect — so AQE contributes nothing (its
+    * coalescing is disabled on explicit-width repartitions anyway)
+    * while charging one extra driver JOB per exchange (stage
+    * materialization) plus per-stage re-optimization, which at gate
+    * scale IS the latency (the SCC small-mode lesson, measured there at
+    * ~55 ms/stage; an ingest's repartition+write runs as two jobs under
+    * AQE, one without). Parent-session RESULTS are unchanged: the
+    * written table CONTENTS are a pure function of the input multiset
+    * (hive dirs split by value; all state-table readers are order-free
+    * by the store's contracts), so only job count and intra-file row
+    * order move. */
+  private[graft] def maint(spark: SparkSession): SparkSession =
+    graft.NarrowSession(spark, spark.sessionState.conf.numShufflePartitions)
 
   /** Rebase a frame onto `session` through its RDD — the documented
     * cross-session migration (`child.createDataFrame(df.rdd,

@@ -12,8 +12,9 @@ class ServerSpec extends SparkSpec {
   private lazy val server =
     Server.start(GraphStore.modern(spark), port = 0)
 
-  private def connect(): (Socket, BufferedReader, PrintWriter) = {
-    val s = new Socket("localhost", server.getLocalPort)
+  private def connect(port: Int = server.getLocalPort)
+      : (Socket, BufferedReader, PrintWriter) = {
+    val s = new Socket("localhost", port)
     (s,
       new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8")),
       new PrintWriter(
@@ -63,6 +64,41 @@ class ServerSpec extends SparkSpec {
     threads.foreach(_.start())
     threads.foreach(_.join(120000))
     assert(errors.get() == 0)
+
+    // index-seeded Emu templates (the light lane) across concurrent
+    // connections, checked against the in-process scan path
+    val graph = GraphStore.tpch(spark, "/root/testdata/sf0.01").cached()
+    val tpch = Server.start(graph, port = 0)
+    try {
+      val (ctl, cin, cout) = connect(tpch.getLocalPort)
+      val keys = Emu.keysOf(Emu.DefaultTemplates)
+      val pools = try keys.map { k =>
+        assert(roundTrip(cin, cout, s"BuildIndex(V, '$k')").head
+          .startsWith("=>Index built"))
+        k -> roundTrip(cin, cout, s"#pool $k").map(_.stripPrefix("=>"))
+          .toArray
+      }.toMap finally ctl.close()
+      val rand = new scala.util.Random(11)
+      val queries = (0 until 16).map(i => Emu.instantiate(
+        Emu.DefaultTemplates(i % Emu.DefaultTemplates.size), pools, rand))
+      val scan = graft.gremlin.Graft(graph) // no indexes: the scan path
+      val expected = queries.map(scan.strings)
+      val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val clients = (0 until 4).map { c =>
+        new Thread(() => {
+          val (sock, in, out) = connect(tpch.getLocalPort)
+          try queries.indices.filter(_ % 4 == c).foreach { i =>
+            val got = roundTrip(in, out, queries(i))
+            if (!Answers.same(got, expected(i)))
+              wrong.add(s"${queries(i)}: $got != ${expected(i)}")
+          } catch { case e: Throwable => wrong.add(e.toString) }
+          finally sock.close()
+        })
+      }
+      clients.foreach(_.start())
+      clients.foreach(_.join(300000))
+      assert(wrong.isEmpty, wrong)
+    } finally tpch.close()
   }
 
   override def afterAll(): Unit = {

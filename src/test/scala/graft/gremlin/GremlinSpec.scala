@@ -442,8 +442,13 @@ class GremlinSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      gi.compile("g.V().hasLabel('person').has('name', 'marko')" +
-        ".out('knows').values('name')")
+      // index-seeded hop + attach: the light lane (traverser broadcast
+      // hints; max degrees were computed at BuildIndex) — compiling AND
+      // rebinding the finished plan into the narrow session stay job-free
+      val light = "g.V().hasLabel('person').has('name', 'marko')" +
+        ".out('knows').values('name')"
+      assert(gi.compile(light).light)
+      assert(gi.df(light).sparkSession ne spark)
       // and/or/not used to eagerly localCheckpoint the frontier at
       // compile time — the content-hash tagging must keep this job-free
       gi.compile("g.V().and(out('knows'), out('created'))" +
@@ -460,6 +465,29 @@ class GremlinSpec extends SparkSpec {
       assert(counter.get() == 0,
         "query compilation must not launch Spark jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("light lane: a broadcast threshold below the bound keeps the parent lane") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val sf = "/root/testdata/sf0.001"
+    val q = "g.V().has('mktsegment', 'BUILDING').out('placed')" +
+      ".has('totalprice', gt(100000.0)).count()"
+    val tight = spark.newSession()
+    tight.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    val gTight = Graft(GraphStore.tpch(tight, sf))
+    gTight.strings("BuildIndex(V, 'mktsegment')")
+    // the hop's bound × row width exceeds 1 KB: no traverser hint
+    // anywhere in the plan, and the query stays in its own session
+    assert(!gTight.compile(q).light)
+    val df = gTight.df(q)
+    assert(df.sparkSession eq tight)
+    assert(df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
+      .isEmpty, df.queryExecution.analyzed.treeString)
+    // under the default threshold the same query is light; equal answers
+    val gd = Graft(GraphStore.tpch(spark, sf))
+    gd.strings("BuildIndex(V, 'mktsegment')")
+    assert(gd.compile(q).light)
+    assert(gTight.strings(q) == gd.strings(q))
   }
 
   test("SetConfig DDL records toggles") {

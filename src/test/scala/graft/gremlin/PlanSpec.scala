@@ -79,6 +79,47 @@ class PlanSpec extends SparkSpec {
     assert(!executing.contains("Scan parquet"), executing)
   }
 
+  test("light lane: seeded templates broadcast the traverser, not a graph table") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import graft.{Answers, Emu}
+    val graph = GraphStore.tpch(spark, "/root/testdata/sf0.01").cached()
+    val gi = Graft(graph)
+    val keys = Emu.keysOf(Emu.DefaultTemplates)
+    keys.foreach(k => gi.ddl(s"BuildIndex(V, '$k')"))
+    val scan = Graft(graph)
+    scan.ddl("SetConfig('indexing', 'false')")
+    def cacheOf(df: DataFrame): AnyRef = df.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+    val graphCaches = Seq(cacheOf(graph.vertices), cacheOf(graph.edges))
+    // a whole graph table broadcast: a join-free chain from the exchange
+    // down to a scan of the cached vertex or edge table (a build side
+    // that joins the traverser with a table first is traverser-sized)
+    def tableScan(p: SparkPlan): Boolean = p match {
+      case s: InMemoryTableScanExec =>
+        graphCaches.exists(_ eq s.relation.cacheBuilder)
+      case _ => p.children.size == 1 && tableScan(p.children.head)
+    }
+    val pools = keys.map(k => k -> graph.vertices.select(k)
+      .where(s"$k IS NOT NULL").distinct().orderBy(k).limit(100)
+      .collect().map(_.get(0).toString)).toMap
+    val rand = new scala.util.Random(7)
+    for (t <- Emu.DefaultTemplates) {
+      val q = Emu.instantiate(t, pools, rand)
+      assert(gi.compile(q).light, s"not on the light lane: $q")
+      val df = gi.df(q)
+      assert(df.sparkSession.conf.get("spark.sql.adaptive.enabled") ==
+        "false", q)
+      val plan = df.queryExecution.executedPlan
+      val wide = plan.collect {
+        case b: BroadcastExchangeExec if tableScan(b.child) => b }
+      assert(wide.isEmpty, s"$q broadcasts a graph table:\n$plan")
+      assert(Answers.same(gi.strings(q), scan.strings(q)), q)
+    }
+  }
+
   test("side-effect stores are joins, not collected driver state") {
     val p = plan("g.V().hasLabel('order').has('totalprice', lt(20000.0))" +
       ".aggregate('small').in('placed').where(within('small')).count()")
