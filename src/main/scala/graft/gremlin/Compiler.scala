@@ -161,8 +161,8 @@ object Compiler {
     * upper bound on the frontier's rows, from the fold's count map)
     * tries the light lane first. */
   def compileSeeded(graph: GraphStore, frontier: DataFrame,
-                    steps: List[Step], bound: Option[Long] = None,
-                    degrees: Option[Degrees] = None): Result =
+                    steps: List[Step], bound: Option[Long],
+                    degrees: Option[Degrees]): Result =
     // posting lists hold one row per element (intersections/unions of
     // per-value postings of one key stay element-unique)
     seeded(graph, State(frontier.select(col("id").as("__val")), VertexKind,
@@ -173,8 +173,8 @@ object Compiler {
     * the edge side of InitWithIndex (`expert/init_expert.hpp:199-234`
     * serves both element types). */
   def compileSeededEdges(graph: GraphStore, frontier: DataFrame,
-                         steps: List[Step], bound: Option[Long] = None,
-                         degrees: Option[Degrees] = None): Result =
+                         steps: List[Step], bound: Option[Long],
+                         degrees: Option[Degrees]): Result =
     seeded(graph, State(frontier.select(edgeStruct().as("__val")), EdgeKind,
       attached = false, scala.collection.immutable.ListMap.empty,
       Map.empty, None, Nil, distinctVal = true), steps, bound, degrees)
