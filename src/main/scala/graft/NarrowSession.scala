@@ -9,12 +9,15 @@ import org.apache.spark.sql.SparkSession
  *    `spark.sql.shuffle.partitions=width` (static plans: one driver job
  *    per query instead of one per exchange, no per-stage
  *    re-optimization — the latency of small plans);
- *  - the parent's session time zone (the UTC pin, CLAUDE.md);
+ *  - the parent's session time zone (the UTC pin every graft session
+ *    keeps);
  *  - `spark.sql.sources.parallelPartitionDiscovery.threshold=256`:
  *    hive-bucketed state tables at the store's bounded fan (default 64
  *    dirs) are listed on the driver in ~ms instead of through a
  *    distributed file-listing job per read (~0.15 s at gate scale);
  *  - graft's kernels registered (`VectorExpressions.register`).
+ * Other runtime SQL settings of the parent are NOT copied: a child
+ * starts from the SparkConf, like any `newSession()`.
  *
  * Users: `StateStore.maint` (the parent's width), SCC small mode and
  * peel migration (`GraphAlgos`, the loop's adaptive width), and the
