@@ -65,7 +65,7 @@ object Bench {
     "dedup_best_survivors", "embed_bitext_pairs", "join_bloom_prefilter",
     // round-10: SCC joins the iterative-graph family in the headline
     // (latency = flood rounds × job overhead at sf0.1, the graph_walks
-    // precedent; ProbeScc is the in-JVM steady probe)
+    // precedent; `graft.Probe jobs` is the in-JVM steady probe)
     "graph_scc",
     // round-11: the structurally-new shapes — a drained stateful
     // stream, a two-stage token-ANN rerank, and a state-store
@@ -109,17 +109,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench", 32, "WARN")
 
     // ---- machine-health probe (self-diagnosing artifact: a degraded
     // VM run is identifiable from the JSON alone, without a rerun) ----

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.gremlin.Graft
 import graft.sources.GraphStore
 
@@ -26,17 +25,7 @@ object Demo {
       System.err.println("       (no query args: interactive, reads queries from stdin)")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-demo", 4, "ERROR")
     val graph =
       if (rest(0) == "modern") GraphStore.modern(spark)
       else GraphStore.tpch(spark, rest(0))

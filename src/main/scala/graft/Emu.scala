@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.gremlin.Graft
 import graft.sources.GraphStore
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
@@ -55,25 +54,7 @@ object Emu {
     val templates =
       if (args.length > 3) args.drop(3).toSeq else DefaultTemplates
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-emu")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // concurrent queries share the cluster fairly, like the
-      // reference's per-query thread pools
-      .config("spark.scheduler.mode", "FAIR")
-      // concurrent clients can't use Sweep.transientStorage (a sweep
-      // would kill another client's in-flight checkpointed frontier);
-      // periodic driver GC lets ContextCleaner free UNREACHABLE
-      // checkpoint blocks instead — reachability-safe under concurrency
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-emu", 32, "ERROR", serving = true)
 
     val graph = (if (sfDir == "modern") GraphStore.modern(spark)
                  else GraphStore.tpch(spark, sfDir)).cached()
@@ -93,27 +74,42 @@ object Emu {
         .distinct().limit(1000).collect().map(_.get(0).toString)
     }.toMap
 
-    val latencies = new ConcurrentLinkedQueue[Double]()
-    val errors = new AtomicInteger(0)
-    val queriesRun = new AtomicInteger(0)
-    val done = new CountDownLatch(concurrency)
     // pre-instantiate the full workload deterministically
     val workload = (0 until iterations).map(i =>
       instantiate(templates(i % templates.length), pools, rand))
+    closedLoop("throughput", workload, concurrency) { () =>
+      q => { g.df(q).count(); true }
+    }
+    spark.stop()
+  }
+
+  /** Closed-loop load: `concurrency` client threads each open one
+    * client with `newClient()` and pull queries off a shared cursor
+    * until `workload` is used up. A query counts (and its latency is
+    * kept) when the client returns true; false or a throw counts as an
+    * error. Prints one JSON line: `metric`, qps, queries, errors,
+    * wall_sec, lat_ms p50/p95/p99 and concurrency. */
+  private[graft] def closedLoop(metric: String, workload: IndexedSeq[String],
+      concurrency: Int)(newClient: () => String => Boolean): Unit = {
+    val latencies = new ConcurrentLinkedQueue[Double]()
+    val errors = new AtomicInteger(0)
+    val queriesRun = new AtomicInteger(0)
     val cursor = new AtomicInteger(0)
+    val done = new CountDownLatch(concurrency)
 
     val t0 = System.nanoTime()
     (1 to concurrency).foreach { _ =>
       new Thread(() => {
         try {
+          val run = newClient()
           var i = cursor.getAndIncrement()
-          while (i < iterations) {
-            val q = workload(i)
+          while (i < workload.length) {
             val s0 = System.nanoTime()
             try {
-              g.df(q).count()
-              latencies.add((System.nanoTime() - s0) / 1e6)
-              queriesRun.incrementAndGet()
+              if (run(workload(i))) {
+                latencies.add((System.nanoTime() - s0) / 1e6)
+                queriesRun.incrementAndGet()
+              } else errors.incrementAndGet()
             } catch { case _: Throwable => errors.incrementAndGet() }
             i = cursor.getAndIncrement()
           }
@@ -129,7 +125,6 @@ object Emu {
       if (lats.isEmpty) 0 else lats(math.min(lats.length - 1,
         (p * lats.length).toInt))
     val qps = queriesRun.get() / wallSec
-    println(f"""{"metric":"throughput","qps":$qps%.1f,"queries":${queriesRun.get()},"errors":${errors.get()},"wall_sec":$wallSec%.2f,"lat_ms":{"p50":${pct(0.5)}%.1f,"p95":${pct(0.95)}%.1f,"p99":${pct(0.99)}%.1f},"concurrency":$concurrency}""")
-    spark.stop()
+    println(f"""{"metric":"$metric","qps":$qps%.1f,"queries":${queriesRun.get()},"errors":${errors.get()},"wall_sec":$wallSec%.2f,"lat_ms":{"p50":${pct(0.5)}%.1f,"p95":${pct(0.95)}%.1f,"p99":${pct(0.99)}%.1f},"concurrency":$concurrency}""")
   }
 }

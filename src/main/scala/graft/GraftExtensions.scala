@@ -22,10 +22,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  * [[graft.functions.VectorExpressions.register]] path stays as
  * belt-and-braces for sessions built without the extension (tests,
  * embedded use); both paths resolve from the same builder table, so a
- * session reached either way evaluates identical expressions. All
- * graft mains (`Verify`/`Bench`/`Demo`/`Server`/`Emu`/`Pipeline`)
- * build their sessions through this class, so the injection path is
- * exercised end-to-end every driver run.
+ * session reached either way evaluates identical expressions. Every
+ * graft main builds its session through [[LocalSession]], which
+ * installs this class, so the injection path is exercised end-to-end
+ * every driver run.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Proof probe for the round-10 verdict finding #1 (steady-series
  * contamination): the 2× full-gate cold/warm sweeps leave dead lazy
@@ -44,17 +42,7 @@ object ProbeSteady {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val ratio = if (args.length > 1) args(1).toDouble else 1.3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-probe-steady")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-probe-steady", 32, "ERROR")
 
     var sinceGc = 0
     def timeOne(name: String): Double = {

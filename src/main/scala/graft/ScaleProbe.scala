@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -13,23 +12,13 @@ object ScaleProbe {
     // at 8 vs 32 cores measures whether the shuffle/n²-heavy faces
     // actually parallelize (r13 verdict item 7 — sf0.1's one-row-group
     // gates cannot show this; the replicated 10× corpus can)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-scale-probe", 16, "ERROR")
+    // the README scaling table was measured at a fixed 32-way shuffle
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     // task-time distribution per probed op: the hot-key claims are
     // claims about the MAX task, not the total (a flat total can hide
     // one straggler doing all the work) — report median/max task ms
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) taskMs.add(t.taskInfo.duration)
-      })
+    val probe = Probe.listen(spark)
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val n = base.count()
     // replicate with id offsets AND a per-copy token prefix so copies are
@@ -41,27 +30,11 @@ object ScaleProbe {
     println(s"docs=${docs.count()} (${mult}x of $n)")
     def time(name: String)(f: => Long): Unit =
       if (only.forall(_.exists(name.contains))) {
-        taskMs.clear()
-        val t0 = System.nanoTime()
-        val r = f
-        val secs = (System.nanoTime()-t0)/1e9
-        // listener bus is async: a fixed sleep undercounts TaskEnd
-        // events under load (r10 advice), skewing the exact numbers
-        // the hot-key claims are judged from — poll until the count
-        // stabilizes across two consecutive reads instead
-        var prev = -1
-        var stable = 0
-        var waited = 0
-        while (stable < 2 && waited < 10000) {
-          Thread.sleep(100); waited += 100
-          val cur = taskMs.size()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        val ds = taskMs.toArray(Array.empty[java.lang.Long])
-          .map(_.longValue()).sorted
+        val (r, c) = probe.measure(f)
+        val ds = c.taskDurations.sorted
         val (med, mx) =
           if (ds.isEmpty) (0L, 0L) else (ds(ds.length / 2), ds.last)
-        println(f"$name: $secs%.1fs rows=$r tasks=${ds.length} " +
+        println(f"$name: ${c.sec}%.1fs rows=$r tasks=${ds.length} " +
           f"medianTaskMs=$med maxTaskMs=$mx")
       }
     def wanted(names: String*): Boolean =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.gremlin.Graft
 import graft.sources.GraphStore
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
@@ -42,23 +41,7 @@ object Server {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(9181)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      // NEVER Sweep.transientStorage here: a sweep would free another
-      // connection's in-flight locally-checkpointed frontier (cannot
-      // recompute). Periodic driver GC lets ContextCleaner free only
-      // UNREACHABLE checkpoint blocks — reachability-safe (CLAUDE.md)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-server", 32, "ERROR", serving = true)
 
     val graph = (if (sfDir == "modern") GraphStore.modern(spark)
                  else GraphStore.tpch(spark, sfDir)).cached()
@@ -113,7 +96,11 @@ object Server {
                 case None => g.strings(q).foreach(out.println)
               }
             } catch {
-              case e: Exception => out.println(s"ERROR: ${e.getMessage}")
+              // one reply line: analysis errors carry their plan on
+              // further lines, which a client would read as result rows
+              case e: Exception => out.println("ERROR: " +
+                String.valueOf(e.getMessage).linesIterator.map(_.trim)
+                  .filter(_.nonEmpty).mkString(" "))
             }
           }
           out.println("#done")
@@ -187,40 +174,11 @@ object NetEmu {
     val workload = (0 until iterations).map(i =>
       Emu.instantiate(templates(i % templates.length), pools, rand))
 
-    val latencies = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-    val errors = new AtomicInteger(0)
-    val queriesRun = new AtomicInteger(0)
-    val cursor = new AtomicInteger(0)
-    val done = new java.util.concurrent.CountDownLatch(concurrency)
-
-    val t0 = System.nanoTime()
-    (1 to concurrency).foreach { _ =>
-      new Thread(() => {
-        val (sock, in, out) = connect()
-        try {
-          var i = cursor.getAndIncrement()
-          while (i < iterations) {
-            val s0 = System.nanoTime()
-            try {
-              val (_, ok) = roundTrip(in, out, workload(i))
-              if (ok) {
-                latencies.add((System.nanoTime() - s0) / 1e6)
-                queriesRun.incrementAndGet()
-              } else errors.incrementAndGet()
-            } catch { case _: Throwable => errors.incrementAndGet() }
-            i = cursor.getAndIncrement()
-          }
-        } finally { done.countDown(); sock.close() }
-      }).start()
-    }
-    done.await()
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    val lats = latencies.toArray(Array.empty[java.lang.Double])
-      .map(_.doubleValue()).sorted
-    def pct(p: Double): Double =
-      if (lats.isEmpty) 0 else lats(math.min(lats.length - 1,
-        (p * lats.length).toInt))
-    val qps = queriesRun.get() / wallSec
-    println(f"""{"metric":"net_throughput","qps":$qps%.1f,"queries":${queriesRun.get()},"errors":${errors.get()},"wall_sec":$wallSec%.2f,"lat_ms":{"p50":${pct(0.5)}%.1f,"p95":${pct(0.95)}%.1f,"p99":${pct(0.99)}%.1f},"concurrency":$concurrency}""")
+    val socks = new java.util.concurrent.ConcurrentLinkedQueue[Socket]()
+    try Emu.closedLoop("net_throughput", workload, concurrency) { () =>
+      val (sock, in, out) = connect()
+      socks.add(sock)
+      q => roundTrip(in, out, q)._2
+    } finally socks.forEach(_.close())
   }
 }

@@ -530,79 +530,6 @@ object GraphAlgos {
   }
 
   /**
-   * DataFrame-native connected components: the alternating
-   * large-star/small-star algorithm (Kiveris et al., "Connected
-   * Components in MapReduce and Beyond"). Converges in O(log n)
-   * rounds; every round is two `groupBy(min)` + join passes — no
-   * per-root adjacency materialisation (the classic collect_list trap
-   * on giant components) and no RDDs, so AQE/Tungsten apply throughout.
-   *
-   * Measured vs [[connectedComponents]] at sf0.1 (185k vertices, 750k
-   * edges, local[16]): GraphX 6.7 s, this 20.3 s — Pregel's
-   * partition-reuse beats per-round shuffle+checkpoint at this size,
-   * so GraphX stays the default; this variant exists for environments
-   * where RDD-based GraphX is unavailable/undesirable and as the
-   * AQE-planned path for very wide clusters.
-   */
-  def connectedComponentsDF(g: GraphStore, maxRounds: Int = 25): DataFrame = {
-    val spark = g.vertices.sparkSession
-
-    def undirected(e: DataFrame): DataFrame =
-      e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-
-    def minNeighbor(e: DataFrame): DataFrame =
-      undirected(e).groupBy("u")
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-
-    // large-star: (u,v) with v>u  → (v, m(u)); small-star: v≤u → (v, m(u)) ∪ (u, m(u))
-    def star(e: DataFrame, large: Boolean): DataFrame = {
-      val m = minNeighbor(e)
-      val all = undirected(e)
-      val linked =
-        if (large)
-          all.filter(col("v") > col("u")).join(m, "u")
-            .select(col("v").as("u"), col("m").as("v"))
-        else
-          all.filter(col("v") <= col("u")).join(m, "u")
-            .select(col("v").as("u"), col("m").as("v"))
-            .union(m.select(col("u"), col("m").as("v")))
-      linked.filter(col("u") =!= col("v")).distinct()
-    }
-
-    // localCheckpoint each round: caching truncates EXECUTION but not
-    // the logical plan — without it the analyzer re-walks a plan that
-    // nests ~4× per round (exponential; round 4 alone took >85 s on a
-    // 6-node graph before this)
-    var edges = g.edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    var converged = false
-    var round = 0
-    var prevSig = -1L
-    while (!converged && round < maxRounds) {
-      val next = star(star(edges, large = true), large = false)
-        .localCheckpoint()
-      // order-independent, overflow-free fixpoint signature (ANSI mode
-      // forbids wrapping sum of full-range hashes)
-      val sig = next.agg(expr("bit_xor(xxhash64(u, v))"),
-        count(lit(1))).collect().head
-      val nextSig = Option(sig.get(0)).map(_.asInstanceOf[Long])
-        .getOrElse(0L) ^ sig.getLong(1)
-      converged = nextSig == prevSig
-      prevSig = nextSig
-      edges = next
-      round += 1
-    }
-    // stars: u → component root; isolated vertices are their own root
-    val assigned = edges.select(col("u").as("id"), col("v").as("component"))
-    g.vertices.select(col("id"))
-      .join(assigned, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id"))
-        .as("component"))
-  }
-
-  /**
    * Deterministic successor-ring construction over a bipartite edge
    * label: for every right-vertex ("hub", e.g. a part), take its
    * `ringLen` smallest left-neighbors (orders) and chain them into a
@@ -832,8 +759,8 @@ object GraphAlgos {
   /** Size an iterative loop's edge-face partition count to the data: a
     * round is O(edges) of work split across every partition, and on a
     * small graph the per-task scheduling floor dominates — 32
-    * partitions ran the sf0.1 SCC gate 1.4× slower than 4 (measured,
-    * ProbeScc). One partition per ~50k rows, capped at the cluster's
+    * partitions ran the sf0.1 SCC gate 1.4× slower than 4 (measured at
+    * a411d6a). One partition per ~50k rows, capped at the cluster's
     * parallelism. The width is threaded through EXPLICIT
     * `repartition(n, key)` calls on the pre-partitioned edge faces —
     * join sides then co-locate to that width by Spark's distribution
@@ -1493,8 +1420,8 @@ object GraphAlgos {
    * would drift by addition order. Rounds are bounded by the longest
    * shortest-path hop count; `maxIters` is a safety cap. Each round
    * eagerly `localCheckpoint`s the merged table — the loop plan nests
-   * per iteration and analysis time goes exponential otherwise (same
-   * policy as [[connectedComponentsDF]]).
+   * per iteration and analysis time goes exponential otherwise (the
+   * iterative-loop checkpoint invariant, CLAUDE.md).
    *
    * Reference scope: Grasper has no weighted-path operator; this is
    * part of the iterative-algorithm extension the Spark rebuild adds

@@ -244,7 +244,7 @@ private[graft] object IdLedger {
       // EXPLICIT width on the bucket repartition (the cc __bk lesson,
       // r13): without a partition count AQE coalesces the tiny shuffle
       // to ONE partition and a single task writes all ~64 bucket files
-      // serially — measured ~1.0 s vs ~0.45 s at width 8-32 (ProbeWrite)
+      // serially — measured ~1.0 s vs ~0.45 s at width 8-32 (at 90b25f6)
       () => fresh.select(col(idCol).cast("long").as("vec_id"), col("__ib"))
         .repartition(fresh.sparkSession.sessionState.conf
           .numShufflePartitions, col("__ib"))

@@ -187,7 +187,7 @@ object StateStore {
     // from a thread pool so one write's straggler tail back-fills with
     // the next write's tasks); the token/marker/swap below still runs
     // strictly AFTER every write returns, so crash safety is unchanged.
-    // Layout discipline (§6 small files, measured in ProbeWrite):
+    // Layout discipline (§6 small files, measured at 90b25f6):
     //  - partitioned tables repartition by their partition columns at
     //    the session width, so each `col=value` dir lands as ONE file
     //    per compaction instead of one file per input task — without

@@ -44,6 +44,12 @@ class ServerSpec extends SparkSpec {
       val err = roundTrip(in, out, "not a query (((")
       assert(err.size == 1 && err.head.startsWith("ERROR"))
       assert(roundTrip(in, out, "g.E().count()") == Seq("=>6"))
+      // an analysis error (its message carries the analyzed plan on
+      // further lines) is still ONE ERROR line before #done
+      val unresolved = roundTrip(in, out, "#pool no_such_col")
+      assert(unresolved.size == 1 && unresolved.head.startsWith("ERROR: "),
+        unresolved.mkString("\n"))
+      assert(roundTrip(in, out, "g.V().count()") == Seq("=>6"))
     } finally sock.close()
   }
 

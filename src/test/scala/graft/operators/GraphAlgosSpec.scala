@@ -26,21 +26,6 @@ class GraphAlgosSpec extends SparkSpec {
     assert(cc(3L) == 3L && cc(5L) == 5L && cc(6L) == 6L)
   }
 
-  test("DF-native components equal GraphX on three graphs") {
-    def ccMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val graphs = Seq(
-      modern,
-      GraphStore(modern.vertices,
-        modern.edges.filter(col("label") === "knows")),
-      GraphStore.tpch(spark, "/root/testdata/sf0.001"))
-    graphs.foreach { g =>
-      val a = ccMap(GraphAlgos.connectedComponents(g))
-      val b = ccMap(GraphAlgos.connectedComponentsDF(g))
-      assert(b == a, s"DF CC disagrees with GraphX")
-    }
-  }
-
   test("shortest hops from marko") {
     val d = GraphAlgos.shortestHops(modern, 1L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
