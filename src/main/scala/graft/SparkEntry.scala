@@ -1596,7 +1596,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("size"))
     }),
     // cc state compaction mid-sequence: two ingested thirds fold into
-    // one dir (edges/blooms union, labels LAST — the per-operator
+    // one dir (ledger ids/idbloom union, labels LAST — the per-operator
     // reader contract), the third drop ingests against the compacted
     // state, and the final labeling must still equal the one-shot CC
     // — graph_cc_incremental's oracle verbatim

@@ -76,119 +76,7 @@ object GraphAlgos {
           .as("reciprocity_pm"))
   }
 
-  /** DEFAULT hash-bucket fanout of the [[ccIncremental]] edge
-    * ledger's hive partitioning — the exact-verify read prunes to the
-    * (few) bloom-positive buckets instead of scanning the archive. 64
-    * keeps per-increment file counts sane (≤64 files after the
-    * pre-write repartition) while a handful of FP edges touch ≈ that
-    * many buckets. Sizing is PER STATE (persisted in `meta` at first
-    * ingest): a 10⁹-edge archive wants more buckets and a bigger
-    * bloom. */
-  private[graft] val CcLedgerBuckets = 64
-  /** DEFAULT per-increment edge-bloom sizing: 2^25 bits (4 MiB) holds
-    * ~3M edges per state at ~1e-5 FP with 5 hashes — FP rate only
-    * costs verify I/O, never correctness (no false negatives). */
-  private[graft] val CcBloomBits = 1 << 25
-  private[graft] val CcBloomHashes = 5
-
-  /** One read of the committed increments' `bloom` tables: OR-fold of
-    * the per-dir edge blooms (each dir stores a bloom COVERING its own
-    * edges — the fold equals a filter over the union, never
-    * false-negative, and stays correct after [[ccCompact]] unions the
-    * per-dir tables) PLUS the per-state ledger sizing the rows carry
-    * (identical on every row by construction). Bytes × few dirs — a
-    * trivial driver fold. Per-dir blooms are IMMUTABLE once committed
-    * (compaction produces new dirs/mtimes), so they cache on the
-    * driver keyed by (path, mtime): an ingest that just WROTE the
-    * previous increment's bloom folds the meta with ZERO jobs (r12
-    * verdict: the ledger added ~4 constant jobs per ingest). */
-  private val bloomCache =
-    new java.util.LinkedHashMap[(String, Long),
-        (Array[Byte], Int, Int)](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long),
-            (Array[Byte], Int, Int)]): Boolean = size() > 16
-    }
-
-  private def bloomMtime(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/bloom")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-  }
-
-  private[graft] def cacheBloom(spark: SparkSession, dir: String,
-      v: (Array[Byte], Int, Int)): Unit =
-    bloomCache.synchronized {
-      bloomCache.put((dir, bloomMtime(spark, dir)), v); ()
-    }
-
-  private def readEdgeLedgerMeta(spark: SparkSession,
-      dirs: Seq[String]): (Array[Byte], Int, Int) = {
-    val missing = dirs.filterNot(d =>
-      IdLedger.hasTable(spark, s"$d/bloom"))
-    require(missing.isEmpty,
-      s"pre-bloom cc state (no bloom table) under " +
-        s"${missing.mkString(", ")}: this state predates the r12 edge " +
-        "ledger — rebuild it with ccCompact(spark, statePath, " +
-        "buckets, bloomBits) (one-time migration) or re-ingest into " +
-        "a fresh state")
-    val perDir = dirs.map { d =>
-      val key = (d, bloomMtime(spark, d))
-      val hit = bloomCache.synchronized(Option(bloomCache.get(key)))
-      hit.getOrElse {
-        val rows = spark.read.parquet(s"$d/bloom").collect()
-        val folded = rows.map(_.getAs[Array[Byte]]("__bloom"))
-          .reduce((a, b) =>
-            Array.tabulate(a.length)(i => (a(i) | b(i)).toByte))
-        val v = (folded, rows.head.getAs[Int]("buckets"),
-          rows.head.getAs[Int]("bloom_bits"))
-        bloomCache.synchronized { bloomCache.put(key, v) }
-        v
-      }
-    }
-    (perDir.map(_._1).reduce((a, b) =>
-      Array.tabulate(a.length)(i => (a(i) | b(i)).toByte)),
-      perDir.head._2, perDir.head._3)
-  }
-
-  /** The archive-edge ledger read of an [[ccIncremental]] ingest,
-    * PRUNED to the given hash buckets — exposed for the plan-guard
-    * spec, which asserts the scan roots are exactly the touched bucket
-    * directories (an ingest's exact-verify never reads — or even
-    * LISTS — untouched archive buckets). Pruning is PATH-level: the
-    * touched `__bk=N` leaf dirs are handed to the reader directly, so
-    * a 64-bucket × N-increment ledger costs a handful of driver
-    * exists() probes instead of a full-root listing job per prior dir
-    * (a >32-path root triggers Spark's distributed file-listing job —
-    * measured ~0.13 s per dir per ingest at gate scale, r14). A
-    * touched bucket can be absent from every dir (an OR-fold false
-    * positive): the read is then empty, which the anti-join treats as
-    * fresh — exactly the FP contract. */
-  private[graft] def ccArchiveLedger(spark: SparkSession,
-      prior: Seq[String], touched: Seq[Int]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val paths = prior.flatMap { p =>
-      val root = new org.apache.hadoop.fs.Path(s"$p/edges")
-      val f = root.getFileSystem(conf)
-      // the TABLE must exist (a silent empty read would admit a
-      // re-present as fresh); absent BUCKET dirs are the sparse/FP case
-      require(f.exists(root),
-        s"ccIncremental: missing edges ledger under $p — corrupted state?")
-      touched.map(b => new org.apache.hadoop.fs.Path(root, s"__bk=$b"))
-        .filter(f.exists).map(_.toString)
-    }
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dst",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(paths: _*).select(col("src"), col("dst"))
-  }
-
-  /** Compact an [[ccIncremental]] state root: edge ledger and blooms
+  /** Compact an [[ccIncremental]] state root: the [[IdLedger]] tables
     * union (both readers fold associatively — the anti-join probes the
     * union, blooms OR), but `labels` is a LAST-TABLE read
     * ([[ccIncremental]] reads only the newest labels), so the generic
@@ -198,37 +86,23 @@ object GraphAlgos {
     StateStore.compact(spark, statePath, lastTables = Set("labels"))
 
   /**
-   * [[ccCompact]] with a LEDGER RESIZE: rebuilds the edge ledger's
-   * hash-bucket layout AND the per-state bloom at the given sizing
-   * from the edges the compaction is already rewriting — the rescue
-   * for a state whose archive outgrew its first-ingest sizing (the
-   * default 2^25 bloom saturates near ~7.5M edges: ~13% FP means the
-   * exact-verify opens nearly every bucket forever, measured r12) and
-   * the one-time migration for pre-bloom (r11-format) states. Runs
-   * even on a single-dir state; two passes over the old edge files
-   * (bucket rewrite + bloom fold) — a compaction is O(archive) by
-   * definition. The next ingest reads the NEW sizing back from the
-   * rebuilt bloom rows (per-state sizing contract unchanged).
+   * [[ccCompact]] with a LEDGER RESIZE: [[IdLedger.rebuilt]] rebuilds
+   * the edge ledger's hash-bucket layout AND the per-state bloom at the
+   * given sizing from the edges the compaction is already rewriting —
+   * the rescue for a state whose archive outgrew its first-ingest
+   * sizing, and the one-time migration for pre-ledger states (whose
+   * edges sit in an `edges` table, with or without a `bloom` table).
+   * Runs even on a single-dir state. The next ingest reads the NEW
+   * sizing back from the rebuilt bloom rows (per-state sizing contract
+   * unchanged).
    */
   def ccCompact(spark: SparkSession, statePath: String,
                 buckets: Int, bloomBits: Int): Unit =
     StateStore.compactRewrite(spark, statePath,
         lastTables = Set("labels")) { m =>
-      val edges = m("edges")._1.select(col("src"), col("dst"))
-        .withColumn("__h", xxhash64(col("src"), col("dst")))
-        .withColumn("__bk",
-          pmod(col("__h"), lit(buckets.toLong)).cast("int"))
-      val bloom = CurationOps.bloomFromHashes(
-        edges.select(col("__h")), bloomBits, CcBloomHashes)
-      // staged frames stay on the merged frames' (maintenance)
-      // session; no repartition on edges — compactRewrite repartitions
-      // every partitioned staged table by its partition columns
-      val ms = edges.sparkSession
-      import ms.implicits._
-      m + ("edges" -> (edges, Seq("__bk"))) +
-        ("bloom" -> (Seq((bloom, buckets, bloomBits))
-          .toDF("__bloom", "buckets", "bloom_bits")
-          .repartition(1), Seq.empty[String]))
+      val edges = m.getOrElse("ids", m("edges"))._1
+        .select(col("src"), col("dst"))
+      IdLedger.rebuilt(m - "edges" - "bloom", edges, buckets, bloomBits)
     }
 
   /**
@@ -236,33 +110,26 @@ object GraphAlgos {
    * stream: each call ingests an edge drop and returns the labeling
    * of EVERY vertex seen so far, without re-reading old edge drops.
    * The state per increment holds the drop's (deduplicated,
-   * canonically ordered) edges — the idempotence ledger — and the
-   * post-ingest `labels` table. An ingest runs CC over the previous
-   * labels rendered as STAR edges (`component → member`) unioned with
-   * the new drop: contracting a graph's components to stars preserves
-   * its connectivity relation exactly, so
-   * `CC(stars(CC(A)) ∪ B) = CC(A ∪ B)` — and because labels are
-   * canonical MIN ids and the old component id itself is a star
-   * endpoint, the merged labels stay canonical min ids, equal to a
-   * one-shot recompute over the union (spec-pinned, including a drop
+   * canonically ordered) edges — the [[IdLedger]] keyed by
+   * `(src, dst)` — and the post-ingest `labels` table. An ingest runs
+   * CC over the previous labels rendered as STAR edges
+   * (`component → member`) unioned with the new drop: contracting a
+   * graph's components to stars preserves its connectivity relation
+   * exactly, so `CC(stars(CC(A)) ∪ B) = CC(A ∪ B)` — and because
+   * labels are canonical MIN ids and the old component id itself is a
+   * star endpoint, the merged labels stay canonical min ids, equal to
+   * a one-shot recompute over the union (spec-pinned, including a drop
    * that MERGES two previously separate components).
    *
    * Scale shape: the per-ingest graph is |V| star edges + |B| new
    * edges — label-sized, never the edge history (the property that
    * makes nightly graph ingests affordable when E ≫ V). The
-   * idempotence LEDGER obeys the same bound: re-presented edges are
-   * detected by a bloom prefilter over the committed edge hashes
-   * (per-increment filters OR-fold, so the check is one driver-side
-   * byte fold — NO archive scan), and only the bloom-POSITIVE drop
-   * edges (re-presents + the filter's ~1e-5 FP tail) exact-verify
-   * against an archive read PARTITION-PRUNED to their hash buckets
-   * (edges persist hive-partitioned by `__bk = hash(src,dst) mod
-   * [[CcLedgerBuckets]]`). Blooms never false-negative, so
-   * bloom-negative edges are *definitely* new and the split is exact;
-   * a fresh nightly drop therefore ingests without touching the edge
-   * history at all — the cost tracks the drop + labels, not
-   * E_history. Re-presented edges short-circuit before committing
-   * (the [[graft.operators.StateStore]] retry contract); the returned
+   * idempotence ledger obeys the same bound: a fresh nightly drop is
+   * bloom-negative and ingests without touching the edge history at
+   * all; only re-presents and the bloom's FP tail exact-verify against
+   * the bucket-pruned archive ([[IdLedger]]). Re-presented edges
+   * short-circuit before committing (the
+   * [[graft.operators.StateStore]] retry contract); the returned
    * DataFrame reads back the COMMITTED labels table, so later ingests
    * to the same path never change an earlier call's result.
    * Components cover edge-incident vertices (the operator sees only
@@ -270,23 +137,16 @@ object GraphAlgos {
    * Output: `(id, component)`, component = min member id.
    */
   def ccIncremental(newEdges: DataFrame, statePath: String,
-                    buckets: Int = CcLedgerBuckets,
-                    bloomBits: Int = CcBloomBits): DataFrame = {
+                    buckets: Int = IdLedger.Buckets,
+                    bloomBits: Int = IdLedger.BloomBits): DataFrame = {
     val spark = newEdges.sparkSession
     val prior = StateStore.committed(spark, statePath)
     // ledger sizing is a PER-STATE property: the first ingest persists
-    // it on the bloom rows and every later ingest reads it back in the
-    // same job that folds the filters (the caller's parameters only
-    // size a NEW state) — size `buckets` and `bloomBits` to the
-    // expected ARCHIVE edge count (bloom FP rate drives how many
-    // buckets the exact-verify opens), not the drop
-    val priorMeta =
-      if (prior.isEmpty) None
-      else Some(readEdgeLedgerMeta(spark, prior))
-    val (bk, bb) = priorMeta.map(m => (m._2, m._3))
-      .getOrElse((buckets, bloomBits))
-    // canonical drop, hashed once: __h feeds the bloom, __bk the
-    // bucket layout; computed lineage runs once (self-referenced)
+    // it on the bloom rows and every later ingest reads it back (the
+    // caller's parameters only size a NEW state) — size `buckets` and
+    // `bloomBits` to the expected ARCHIVE edge count
+    val (bloomOpt, bk, bb) = IdLedger.sizing(spark, prior, buckets,
+      bloomBits)
     // the ingest's bookkeeping (the canonical-drop checkpoint, split
     // aggregation, state-table writes, the small-path label collects)
     // runs on the AQE-off maintenance session — every one of these is
@@ -297,85 +157,32 @@ object GraphAlgos {
     // AQE stage jobs at plan time (the documented lazy-checkpoint
     // gotcha); gate drops arrive checkpointed, so `.rdd` is free.
     val ms = StateStore.maint(spark)
-    val norm = StateStore.rebase(
-        newEdges.select(col("src"), col("dst")), ms)
-      .select(
-        least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst")).distinct()
-      .withColumn("__h", xxhash64(col("src"), col("dst")))
-      .withColumn("__bk", pmod(col("__h"), lit(bk.toLong)).cast("int"))
+    val keys = Seq("src", "dst")
+    // canonical drop, hashed once; computed lineage runs once
+    // (self-referenced by the split)
+    val norm = IdLedger.withHash(
+        StateStore.rebase(newEdges.select(col("src"), col("dst")), ms)
+          .select(
+            least(col("src"), col("dst")).cast("long").as("src"),
+            greatest(col("src"), col("dst")).cast("long").as("dst"))
+          .distinct(),
+        keys, bk)
       .localCheckpoint(false)
-    // ONE aggregation job over the checkpointed drop computes BOTH the
-    // drop's bloom bytes and the touched buckets (r12 verdict #3: the
-    // ledger's constant per-ingest jobs — this replaces the separate
-    // touched-collect and bloomFromHashes jobs): explode each edge's
-    // bloom positions into byte-index/bit-mask rows, tagged with the
-    // edge's bucket when it is bloom-POSITIVE against the folded
-    // archive filter; the byte-grouped bit_or rebuilds the drop's
-    // bloom bytes and the union of the collected tags is the touched
-    // set. The persisted bloom covers the WHOLE canonical drop — a
-    // SUPERSET of the fresh rows the write persists. Supersets only
-    // ADD bits, so no-false-negative holds, and a re-present's bits
-    // are already set in the dir that owns it, so the OR-fold is
-    // unchanged; the only cost is FP bits, bounded by the drop size.
-    val VE = graft.functions.VectorExpressions
-    VE.register(spark)
-    val inBloom = priorMeta match {
-      case Some(m) =>
-        val bloomBc = spark.sparkContext.broadcast(m._1)
-        VE.bloomContainsBc(col("__h"), bloomBc, bb, CcBloomHashes)
-      case None => lit(false)
-    }
-    // [[graft.functions.BloomBytesAgg]]: the shuffle carries one
-    // sparse-capped buffer per map partition and exactly ONE binary
-    // row reaches the driver (the explode → per-word bit_or → collect
-    // formulation shipped ~270k small rows per gate-scale ingest)
-    val aggRow = norm.agg(
-        VE.bloomAgg(col("__h"), bb, CcBloomHashes).as("__b"),
-        collect_set(when(inBloom, col("__bk"))).as("__t"),
-        count(lit(1)).as("__n"))
-      .collect().head
-    val bloom = aggRow.getAs[Array[Byte]](0)
-    val touched = aggRow.getSeq[Int](1)
-    // canonical-drop size, free in the same job: an admissible UPPER
-    // bound on the fresh-row count (fresh ⊆ norm), used only to pick
-    // the small-graph code path below — overestimates route a
-    // re-present-heavy drop to the distributed path, never the
-    // reverse (the IndexStore admissibility rule)
-    val normCnt = aggRow.getLong(2)
-    // only the bloom-positive tail (re-presents + ~1e-5 FP) pays the
-    // bucket-pruned exact-verify; a fully bloom-negative drop never
-    // builds the archive read at all
-    val incoming =
-      if (prior.isEmpty || touched.isEmpty) norm
-      else norm.filter(!inBloom).unionByName(
-        norm.filter(inBloom)
-          .join(ccArchiveLedger(ms, prior, touched)
-              .select(col("src"), col("dst")),
-            Seq("src", "dst"), "left_anti"))
+    val split = IdLedger.splitFresh(norm, keys, prior, bloomOpt, bb)
     def lastLabels(sess: SparkSession, dirs: Seq[String]): DataFrame =
       sess.read.parquet(dirs.last + "/labels")
-    // write the drop ONCE, derive everything from the read-back (the
-    // exactIncremental pattern: ledger and labels can never diverge);
-    // repartition by bucket first so each bucket lands as one file,
-    // not one file per (task × bucket). The write IS the materializing
-    // action — emptiness (a fully re-presented drop) is read off the
-    // written layout with a driver FS listing, not a separate isEmpty
-    // job
+    // write the drop's ledger ONCE, derive everything from the
+    // read-back (the exactIncremental pattern: ledger and labels can
+    // never diverge). The write IS the materializing action —
+    // emptiness (a fully re-presented drop) is read off the written
+    // layout with a driver FS listing, not a separate isEmpty job
     val dir = StateStore.nextDir(spark, statePath)
-    // EXPLICIT width on the bucket repartition: without a partition
-    // count AQE coalesces the (tiny at gate scale) shuffle to one
-    // partition and a single task writes all ~64 bucket files
-    // serially — measured as the dominant per-ingest job. The session
-    // shuffle width is the scale knob either way.
-    incoming.repartition(
-        ms.sessionState.conf.numShufflePartitions, col("__bk"))
-      .write.partitionBy("__bk").mode("overwrite").parquet(s"$dir/edges")
-    val edgesPath = new org.apache.hadoop.fs.Path(s"$dir/edges")
-    val wroteRows = edgesPath
+    IdLedger.writeIds(split.fresh, keys, dir)
+    val idsPath = new org.apache.hadoop.fs.Path(s"$dir/ids")
+    val wroteRows = idsPath
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(edgesPath)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("__bk="))
+      .listStatus(idsPath)
+      .exists(s => s.isDirectory && s.getPath.getName.startsWith("__ib="))
     if (!wroteRows) {
       StateStore.delete(dir) // uncommitted; tidy up for the next index
       if (prior.nonEmpty) return lastLabels(spark, prior)
@@ -388,22 +195,17 @@ object GraphAlgos {
             org.apache.spark.sql.types.LongType))))
     }
     import ms.implicits._
-    // the bloom rows are driver-held bytes with no lineage and the
-    // labels table derives only from the already-written edges + the
+    // the bloom row is driver-held bytes with no lineage and the
+    // labels table derives only from the already-written ids + the
     // PRIOR dirs — two independent state-table productions, overlapped
     // (opt guide §2.6); commit still waits for both
     StateStore.inParallel(Seq(
-      () => {
-        Seq((bloom, bk, bb)).toDF("__bloom", "buckets", "bloom_bits")
-          .repartition(1).write.mode("overwrite").parquet(s"$dir/bloom")
-        // the cache serves the NEXT ingest's meta fold w/o a read job
-        cacheBloom(spark, dir, (bloom, bk, bb))
-      },
+      () => IdLedger.writeBloom(ms, dir, bk, bb, split.bloomBytes),
       () => {
         // small-path reads/writes stay on the maintenance session;
         // the DISTRIBUTED path (archive-scale states) builds on the
         // parent so the iterative CC keeps AQE and its own tuning
-        val fresh = ms.read.parquet(s"$dir/edges")
+        val fresh = ms.read.parquet(s"$dir/ids")
           .select(col("src"), col("dst"))
         val prevLabels =
           if (prior.isEmpty) None else Some(lastLabels(ms, prior))
@@ -411,20 +213,22 @@ object GraphAlgos {
         // edges — LABEL-sized by the contraction property. Below
         // [[CcSmallEdges]] the exact min-id labeling computes as a
         // driver union-find over a bounded collect. The sizes that
-        // decide the path cost NO jobs: the drop bound (`normCnt`)
-        // rides the split's aggregation row, and the label count is a
-        // parquet-footer fold over the prior labels table (exact
-        // metadata; small-path labels land as ONE file below, so this
-        // opens one footer). The count() formulation paid two
-        // scheduler-bound jobs per ingest for numbers already at
-        // hand. Archive-scale states exceed the threshold and keep
+        // decide the path cost NO jobs: the drop's row count (an
+        // admissible UPPER bound on the fresh rows — overestimates
+        // route a re-present-heavy drop to the distributed path, never
+        // the reverse) rides the split's aggregation row, and the
+        // label count is a parquet-footer fold over the prior labels
+        // table (exact metadata; small-path labels land as ONE file
+        // below, so this opens one footer). The count() formulation
+        // paid two scheduler-bound jobs per ingest for numbers already
+        // at hand. Archive-scale states exceed the threshold and keep
         // the GraphX path — the small path is a latency floor, not a
         // scale path.
         val labelCnt = prior.lastOption
           .map(d => StateStore.parquetRows(spark, s"$d/labels"))
           .getOrElse(0L)
         val labelsOut: DataFrame =
-          if (normCnt + labelCnt <= CcSmallEdges) {
+          if (split.rows + labelCnt <= CcSmallEdges) {
             // the two bounded collects are independent reads of
             // disjoint tables — overlap them (opt guide §2.6)
             var fe: Array[(Long, Long)] = null
@@ -448,7 +252,7 @@ object GraphAlgos {
           } else {
             // archive-scale: rebuild on the PARENT session (AQE on —
             // the iterative CC wants runtime coalescing/skew handling)
-            val freshP = spark.read.parquet(s"$dir/edges")
+            val freshP = spark.read.parquet(s"$dir/ids")
               .select(col("src"), col("dst"))
             val prevLabelsP =
               if (prior.isEmpty) None else Some(lastLabels(spark, prior))
@@ -846,9 +650,6 @@ object GraphAlgos {
       changed = next.filter(col("__chg")).count()
       color = next.drop("__chg")
     }
-    if (sys.env.contains("GRAFT_SCC_DEBUG"))
-      System.err.println(s"[scc] $phase flood: $flood rounds " +
-        s"(block $block, small=$small)")
     if (requireConverged && changed > 0)
       throw new IllegalStateException(
         s"SCC $phase flood did not converge in $maxFlood rounds")
@@ -1012,9 +813,9 @@ object GraphAlgos {
   /** Single-source BFS distances to convergence over a pre-partitioned
     * undirected edge face: `(id, d)` for every vertex reachable from
     * `start` within `maxHops` (frontier-delta rounds, each
-    * localCheckpointed; certify-or-throw past the cap — the kCore
-    * contract, so an unrolled oracle of the same depth describes the
-    * same set). */
+    * localCheckpointed; certify-or-throw past the cap with the kCore
+    * check-only round, so an unrolled oracle of the same depth
+    * describes the same set). */
   private def bfsFrom(spark: SparkSession, reS: DataFrame, start: Long,
                       maxHops: Int,
                       requireConverged: Boolean): DataFrame = {
@@ -1026,22 +827,28 @@ object GraphAlgos {
     // scans the same visited rows either way, and the union plan
     // grows only linearly in hops over already-truncated lineage
     var frontiers = List(Seq((start, 0)).toDF("id", "d").localCheckpoint())
+    def level(h: Int): DataFrame = {
+      val head = frontiers.head
+      val visited = frontiers.map(_.select(col("id")))
+        .reduce(_ union _)
+      reS.join(head, reS("src") === head("id"))
+        .select(reS("dst").as("id")).distinct()
+        .join(visited, Seq("id"), "left_anti")
+        .withColumn("d", lit(h))
+        .localCheckpoint()
+    }
     var hop = 0
     var fsize = 1L
     while (fsize > 0 && hop < maxHops) {
       hop += 1
-      val head = frontiers.head
-      val visited = frontiers.map(_.select(col("id")))
-        .reduce(_ union _)
-      val next = reS.join(head, reS("src") === head("id"))
-        .select(reS("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("d", lit(hop))
-        .localCheckpoint()
+      val next = level(hop)
       fsize = next.count()
       if (fsize > 0) frontiers ::= next
     }
-    if (requireConverged && fsize > 0)
+    // the cap was reached on a non-empty level: one extra CHECK-ONLY
+    // level before failing (the kCore certification) — an empty one
+    // proves the `maxHops`-level set is already the fixpoint
+    if (requireConverged && fsize > 0 && level(hop + 1).count() > 0)
       throw new IllegalStateException(
         s"BFS did not converge in $maxHops hops")
     frontiers.reduce(_ union _)
@@ -1769,6 +1576,25 @@ object GraphAlgos {
         .select(col("id_a"), col("id_b"))
         .localCheckpoint()
     }
+    val e = peelToFixpoint(pairs, maxRounds, requireConverged,
+      s"kCore(k=$k)")(peel)
+    e.select(col("id_a").as("id")).union(e.select(col("id_b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("core_degree"))
+  }
+
+  /** The peel loop [[kCore]] and [[kTruss]] share: apply `peel` (one
+    * checkpointed round) to the canonical `(id_a, id_b)` pairs until
+    * the edge count stops changing, at most `maxRounds` times. Peeling
+    * only removes edges, so an unchanged count means an unchanged set.
+    * Before failing, one extra CERTIFICATION round: a peel chain that
+    * shrank on every round can still reach the fixpoint exactly at
+    * round `maxRounds`, and peeling is monotone, so a no-op round here
+    * proves the `maxRounds`-round set the unrolled oracle describes is
+    * already final. The extra round is check-only; the returned set is
+    * the `maxRounds`-round one either way it passes. */
+  private def peelToFixpoint(pairs: DataFrame, maxRounds: Int,
+                             requireConverged: Boolean, what: String)(
+      peel: DataFrame => DataFrame): DataFrame = {
     var e = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
     var prev = e.count()
     var round = 0
@@ -1781,21 +1607,11 @@ object GraphAlgos {
       e = next
       round += 1
     }
-    if (!converged && requireConverged) {
-      // One extra CERTIFICATION round before failing: a peel chain that
-      // shrank on every round can still reach the fixpoint exactly at
-      // round maxRounds, and peeling is monotone, so a no-op round here
-      // proves `e` — the maxRounds-round set the unrolled oracle
-      // describes — is already final. The extra round is check-only;
-      // the returned set is `e` either way it passes.
-      converged = peel(e).count() == prev
-      if (!converged)
-        throw new IllegalStateException(
-          s"kCore(k=$k) did not converge in $maxRounds rounds — a " +
-          s"$maxRounds-round unrolled oracle would diverge")
-    }
-    e.select(col("id_a").as("id")).union(e.select(col("id_b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("core_degree"))
+    if (!converged && requireConverged && peel(e).count() != prev)
+      throw new IllegalStateException(
+        s"$what did not converge in $maxRounds rounds — a " +
+        s"$maxRounds-round unrolled oracle would diverge")
+    e
   }
 
   /**
@@ -2090,25 +1906,8 @@ object GraphAlgos {
           .select(col("id_a"), col("id_b")),
         Seq("id_a", "id_b"), "left_semi")
         .localCheckpoint()
-    var e = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    var prev = e.count()
-    var round = 0
-    var converged = prev == 0L
-    while (!converged && round < maxRounds) {
-      val next = peel(e)
-      val n = next.count()
-      converged = n == prev || n == 0L
-      prev = n
-      e = next
-      round += 1
-    }
-    if (!converged && requireConverged) {
-      converged = peel(e).count() == prev
-      if (!converged)
-        throw new IllegalStateException(
-          s"kTruss(k=$k) did not converge in $maxRounds rounds — a " +
-          s"$maxRounds-round unrolled oracle would diverge")
-    }
+    val e = peelToFixpoint(pairs, maxRounds, requireConverged,
+      s"kTruss(k=$k)")(peel)
     e.join(edgeSupport(e, chunkSize), Seq("id_a", "id_b"))
       .select(col("id_a"), col("id_b"), col("support"))
   }

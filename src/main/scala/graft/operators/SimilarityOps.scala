@@ -493,9 +493,10 @@ object SimilarityOps {
           newVecs.select(col(idCol).cast("long").as("vec_id"),
             signHalf(vecCol, 0).as("__ca"),
             signHalf(vecCol, 32).as("__cb")), ms),
-        "vec_id", bk)
+        Seq("vec_id"), bk)
       .localCheckpoint(false)
-    val split = IdLedger.splitFresh(sigs, "vec_id", prior, bloomOpt, bb)
+    val split =
+      IdLedger.splitFresh(sigs, Seq("vec_id"), prior, bloomOpt, bb)
     val incoming = (if (prior.isEmpty) sigs
       else split.fresh
         .localCheckpoint(false)) // isEmpty probe + writes: compute once
@@ -514,8 +515,8 @@ object SimilarityOps {
         StateStore.inParallel(Seq(
           () => incoming.select("vec_id", "__ca", "__cb")
             .write.mode("overwrite").parquet(s"$dir/sigs"),
-          () => IdLedger.write(incoming, "vec_id", dir, bk, bb,
-            split.bloomBytes)))
+          () => IdLedger.writeIds(incoming, Seq("vec_id"), dir),
+          () => IdLedger.writeBloom(ms, dir, bk, bb, split.bloomBytes)))
         StateStore.commit(spark, dir)
         prior :+ dir
       }
@@ -1065,12 +1066,13 @@ object SimilarityOps {
     // three times (negative filter, positive filter, touched collect)
     val fresh0 = IdLedger.withHash(
         StateStore.rebase(
-            newVecs.select(col(idCol).cast("long").as("__id"),
+            newVecs.select(col(idCol).cast("long").as("vec_id"),
               col(vecCol).as("__v")), ms)
-          .dropDuplicates("__id"),
-        "__id", bk)
+          .dropDuplicates("vec_id"),
+        Seq("vec_id"), bk)
       .localCheckpoint(false)
-    val split = IdLedger.splitFresh(fresh0, "__id", prior, bloomOpt, bb)
+    val split =
+      IdLedger.splitFresh(fresh0, Seq("vec_id"), prior, bloomOpt, bb)
     val incoming = (if (prior.isEmpty) fresh0
       else split.fresh
         .localCheckpoint(false)) // isEmpty + assignment: compute once
@@ -1090,8 +1092,8 @@ object SimilarityOps {
     // vector column per ingest for a dedup `incoming` already had
     // (ids are distinct by the dropDuplicates above; opt guide §2.4)
     val model: Array[(Array[Double], Double)] = if (prior.isEmpty) {
-      val fit = fitIvfCentroids(incoming, idCol = "__id",
-        vecCol = "__v", k = kCells, iters = iters)
+      val fit = fitIvfCentroids(incoming, vecCol = "__v", k = kCells,
+        iters = iters)
       centroidsDf(ms, fit).repartition(1)
         .write.mode("overwrite").parquet(s"$dir/centroids")
       fit.map(c => (c, c.map(x => x * x).sum))
@@ -1103,19 +1105,19 @@ object SimilarityOps {
     // to disjoint paths: overlap the write jobs (opt guide §2.6);
     // commit still waits for all of them
     StateStore.inParallel(Seq(
-      // explicit width (the cc __bk lesson): a width-less repartition
-      // lets AQE coalesce the tiny shuffle to one partition and one
-      // task then writes every cell file serially
+      // explicit width (the IdLedger.writeIds lesson): a width-less
+      // repartition lets AQE coalesce the tiny shuffle to one partition
+      // and one task then writes every cell file serially
       () => incomingM
-        .select(col("__id").as("vec_id"), col("__v"),
+        .select(col("vec_id"), col("__v"),
           l2norm(col("__v")).as("__cn"),
           VE.nearestCellBc(col("__v"), bcm).as("__cell"))
         .repartition(ms.sessionState.conf.numShufflePartitions,
           col("__cell"))
         .write.partitionBy("__cell").mode("overwrite")
         .parquet(s"$dir/postings"),
-      () => IdLedger.write(incomingM, "__id", dir, bk, bb,
-        split.bloomBytes)))
+      () => IdLedger.writeIds(incomingM, Seq("vec_id"), dir),
+      () => IdLedger.writeBloom(ms, dir, bk, bb, split.bloomBytes)))
     // the ingest is eager — the model broadcast is consumed by the
     // write above and the returned frame is a pure read-back, so free
     // it now instead of waiting for a driver GC (advice r13: dead
@@ -1142,9 +1144,8 @@ object SimilarityOps {
     arr
   }
 
-  /** Per-root postings union ([[graft.operators.GraphAlgos]]'s
-    * ccArchiveLedger lesson: multi-root partition inference is
-    * unsupported). */
+  /** Per-root postings union ([[IdLedger.archiveIds]]' lesson:
+    * multi-root partition inference is unsupported). */
   private def readIvfPostings(spark: org.apache.spark.sql.SparkSession,
                               dirs: Seq[String]): DataFrame =
     dirs.map(d => spark.read.parquet(s"$d/postings"))

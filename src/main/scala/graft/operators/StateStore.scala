@@ -117,8 +117,10 @@ object StateStore {
    *    compact to the LAST dir's table, not the union — unioning a
    *    last-read table would hand later reads stale rows.
    *  - hive-partitioned tables (one `col=value` directory level, e.g.
-   *    the cc edge ledger's `__bk=N`) are re-written with the SAME
-   *    `partitionBy`, so partition pruning survives compaction.
+   *    the [[IdLedger]]'s `ids/__ib=N` that every ingest ledger
+   *    writes) are re-written with the SAME `partitionBy`, so the
+   *    ledger's bucket pruning survives compaction; its `idbloom` rows
+   *    union and OR-fold.
    */
   def compact(spark: SparkSession, root: String,
               lastTables: Set[String] = Set.empty): Unit =
@@ -174,7 +176,7 @@ object StateStore {
             s"increments (${partsPerSrc.distinct.mkString(" vs ")}) — " +
             "rewrite the state to one layout before compacting")
         // per-root reads + union: multi-root partition inference is
-        // unsupported (the ccArchiveLedger precedent). Reads build on
+        // unsupported (the IdLedger.archiveIds precedent). Reads build on
         // the AQE-off [[maint]] session, so the whole
         // read→rewrite→stage chain (including any jobs the rewrite
         // hook runs, e.g. a refit's model fit) pays one job per

@@ -798,6 +798,22 @@ class GraphAlgosSpec extends SparkSpec {
     }
   }
 
+  test("doubleSweepDiameter: eccentricity exactly at maxHops certifies") {
+    import spark.implicits._
+    // path 1-2-3-4: both sweeps reach their last vertex at hop 3, and
+    // hop 4 is empty — the 3-level set the unrolled oracle describes
+    val g = GraphStore(Seq(1L).toDF("id"),
+      Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+        .withColumn("label", lit("e")))
+    val out = GraphAlgos.doubleSweepDiameter(g, maxHops = 3)
+      .collect().head
+    assert((out.getLong(0), out.getLong(1), out.getLong(2)) ==
+      ((4L, 3L, 1L)))
+    intercept[IllegalStateException] {
+      GraphAlgos.doubleSweepDiameter(g, maxHops = 2)
+    }
+  }
+
   // ---------------- strongly connected components ----------------
 
   private def sccMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
@@ -877,14 +893,14 @@ class GraphAlgosSpec extends SparkSpec {
     assert(after == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L))
     val dirs = StateStore.committed(spark, state)
-    val metas = spark.read.parquet(dirs.map(_ + "/bloom"): _*)
+    val metas = spark.read.parquet(dirs.map(_ + "/idbloom"): _*)
       .select("buckets", "bloom_bits")
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(metas == Set((8, 1 << 16)), metas.toString)
     // the ledger layout honors the stored bucket count
     val bkDirs = new java.io.File(dirs.head.stripPrefix("file:")
-        + "/edges").listFiles().filter(_.isDirectory).map(_.getName)
-    assert(bkDirs.forall(d => d.stripPrefix("__bk=").toInt < 8),
+        + "/ids").listFiles().filter(_.isDirectory).map(_.getName)
+    assert(bkDirs.forall(d => d.stripPrefix("__ib=").toInt < 8),
       bkDirs.mkString(", "))
   }
 
@@ -907,9 +923,9 @@ class GraphAlgosSpec extends SparkSpec {
     assert(labels(spark.read.parquet(dirs.head + "/labels")) == midLabels)
     // the edge ledger keeps its hive bucket layout through compaction
     val bkDirs = new java.io.File(
-      dirs.head.stripPrefix("file:") + "/edges").listFiles()
+      dirs.head.stripPrefix("file:") + "/ids").listFiles()
       .filter(_.isDirectory).map(_.getName)
-    assert(bkDirs.nonEmpty && bkDirs.forall(_.startsWith("__bk=")),
+    assert(bkDirs.nonEmpty && bkDirs.forall(_.startsWith("__ib=")),
       bkDirs.mkString(", "))
     // post-compact ingest merges against the folded state == one-shot
     val afterC = labels(GraphAlgos.ccIncremental(dropC, state))
@@ -973,19 +989,19 @@ class GraphAlgosSpec extends SparkSpec {
       bloomBits = 1 << 10).count()
     GraphAlgos.ccIncremental(dropB, state).count()
     // resize-compact to a bigger ledger: one dir, NEW sizing persisted,
-    // __bk layout honors the new bucket count
+    // __ib layout honors the new bucket count
     GraphAlgos.ccCompact(spark, state, buckets = 16,
       bloomBits = 1 << 18)
     val dirs = StateStore.committed(spark, state)
     assert(dirs.size == 1, dirs.toString)
-    val meta = spark.read.parquet(dirs.head + "/bloom")
+    val meta = spark.read.parquet(dirs.head + "/idbloom")
       .select("buckets", "bloom_bits").collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(meta == Set((16, 1 << 18)), meta.toString)
     val bkDirs = new java.io.File(dirs.head.stripPrefix("file:")
-        + "/edges").listFiles().filter(_.isDirectory).map(_.getName)
+        + "/ids").listFiles().filter(_.isDirectory).map(_.getName)
     assert(bkDirs.nonEmpty &&
-      bkDirs.forall(d => d.stripPrefix("__bk=").toInt < 16),
+      bkDirs.forall(d => d.stripPrefix("__ib=").toInt < 16),
       bkDirs.mkString(", "))
     // the resized state ingests correctly (sizing read back = new),
     // == one-shot over all drops; re-present still a no-op
@@ -1006,21 +1022,68 @@ class GraphAlgosSpec extends SparkSpec {
     GraphAlgos.ccIncremental(dropA, state2).count()
     GraphAlgos.ccIncremental(dropB, state2).count()
     StateStore.committed(spark, state2).foreach { d =>
-      val plain = spark.read.parquet(s"$d/edges")
+      val plain = spark.read.parquet(s"$d/ids")
         .select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      StateStore.delete(s"$d/edges")
-      StateStore.delete(s"$d/bloom")
+      StateStore.delete(s"$d/ids")
+      StateStore.delete(s"$d/idbloom")
       plain.toDF("src", "dst").write.parquet(s"$d/edges")
     }
     val e = intercept[IllegalArgumentException] {
       GraphAlgos.ccIncremental(dropC, state2)
     }
-    assert(e.getMessage.contains("pre-bloom cc state"), e.getMessage)
+    assert(e.getMessage.contains("pre-ledger state"), e.getMessage)
     GraphAlgos.ccCompact(spark, state2, buckets = 8,
       bloomBits = 1 << 16)
     val afterC2 = labels(GraphAlgos.ccIncremental(dropC, state2))
     assert(afterC2 == afterC)
+  }
+
+  test("ccCompact resize migrates the pre-IdLedger edges/bloom layout") {
+    import spark.implicits._
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val state = java.nio.file.Files
+      .createTempDirectory("graft-ccoldlayout").toString
+    val dropA = Seq((2L, 1L), (2L, 3L), (11L, 10L)).toDF("src", "dst")
+    val dropB = Seq((3L, 10L), (20L, 21L)).toDF("src", "dst")
+    val dropC = Seq((21L, 1L), (40L, 41L)).toDF("src", "dst")
+    GraphAlgos.ccIncremental(dropA, state).count()
+    GraphAlgos.ccIncremental(dropB, state).count()
+    // rewrite every dir to the layout cc's own ledger used before it
+    // moved onto IdLedger: `edges(src, dst, __h)` partitioned by
+    // `__bk`, plus a one-row `bloom` table
+    StateStore.committed(spark, state).foreach { d =>
+      val e = spark.read.parquet(s"$d/ids").select("src", "dst")
+        .as[(Long, Long)].collect().toSeq
+      val b = spark.read.parquet(s"$d/idbloom")
+        .select("__bloom", "buckets", "bloom_bits")
+        .as[(Array[Byte], Int, Int)].collect().toSeq
+      StateStore.delete(s"$d/ids")
+      StateStore.delete(s"$d/idbloom")
+      e.toDF("src", "dst")
+        .withColumn("__h", xxhash64(col("src"), col("dst")))
+        .withColumn("__bk", pmod(col("__h"), lit(64L)).cast("int"))
+        .write.partitionBy("__bk").parquet(s"$d/edges")
+      b.toDF("__bloom", "buckets", "bloom_bits").write.parquet(s"$d/bloom")
+    }
+    val e = intercept[IllegalArgumentException] {
+      GraphAlgos.ccIncremental(dropC, state)
+    }
+    assert(e.getMessage.contains("pre-ledger state"), e.getMessage)
+    GraphAlgos.ccCompact(spark, state, buckets = 8, bloomBits = 1 << 16)
+    val dirs = StateStore.committed(spark, state)
+    assert(dirs.size == 1, dirs.toString)
+    val tables = new java.io.File(dirs.head.stripPrefix("file:"))
+      .listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(tables == Set("ids", "idbloom", "labels"), tables.toString)
+    val afterC = labels(GraphAlgos.ccIncremental(dropC, state))
+    assert(afterC == labels(GraphAlgos.connectedComponents(GraphStore(
+      Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L, 40L, 41L).toDF("id"),
+      dropA.union(dropB).union(dropC)))))
+    val nDirs = StateStore.committed(spark, state).size
+    assert(labels(GraphAlgos.ccIncremental(dropA, state)) == afterC)
+    assert(StateStore.committed(spark, state).size == nDirs)
   }
 
   test("ccCompact crash mid-swap: recovery yields a whole two-table root") {

@@ -644,20 +644,20 @@ class OperatorPlanSpec extends SparkSpec {
     // the bucket of canonical edge (1,2) — same arithmetic as ingest
     val bk = spark.range(1).select(
       pmod(xxhash64(lit(1L), lit(2L)),
-        lit(GraphAlgos.CcLedgerBuckets.toLong)).cast("int"))
+        lit(IdLedger.Buckets.toLong)).cast("int"))
       .collect()(0).getInt(0)
-    val led = GraphAlgos.ccArchiveLedger(spark, prior, Seq(bk))
+    val led = IdLedger.archiveIds(spark, prior, Seq(bk), Seq("src", "dst"))
     // plan guard: pruning is PATH-level — the scan's root paths are
     // exactly the touched bucket directories, so an ingest's
     // exact-verify never opens (or lists) untouched bucket dirs
     val p = plan(led)
-    assert(p.contains(s"__bk=$bk"), p.take(1500))
-    assert(!"__bk=\\d+".r.findAllIn(p).exists(_ != s"__bk=$bk"),
+    assert(p.contains(s"__ib=$bk"), p.take(1500))
+    assert(!"__ib=\\d+".r.findAllIn(p).exists(_ != s"__ib=$bk"),
       p.take(1500))
     // behavioral: only that bucket's directories are ever touched
     val files = led.select(input_file_name()).distinct()
       .collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(_.contains(s"__bk=$bk")),
+    assert(files.nonEmpty && files.forall(_.contains(s"__ib=$bk")),
       files.mkString(", "))
     assert(led.select("src", "dst").collect()
       .map(r => (r.getLong(0), r.getLong(1))).contains((1L, 2L)))

@@ -864,6 +864,97 @@ class OperatorsSpec extends SparkSpec {
     assert(StateStore.committed(spark, state).size == nDirs)
   }
 
+  test("IdLedger crash point: ledger tables written, COMMIT never lands") {
+    import spark.implicits._
+    // the on-disk shape of an ingest that wrote its ledger tables
+    // (`ids`, `idbloom`) and died before its own table and COMMIT: run
+    // the real ingest, then remove everything but the ledger
+    def crashAfterLedger(state: String, ownTable: String): Unit = {
+      val dir = StateStore.committed(spark, state).last
+      StateStore.delete(s"$dir/$ownTable")
+      StateStore.delete(s"$dir/COMMIT")
+    }
+    def lastIs(state: String, n: Int): Boolean = {
+      val dirs = StateStore.committed(spark, state)
+      dirs.size == n + 1 && dirs.last.endsWith(s"/inc_$n")
+    }
+    // ---- ccIncremental ----
+    val cc = tmpState("cc_crash")
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dropA = Seq((2L, 1L), (2L, 3L), (11L, 10L)).toDF("src", "dst")
+    val dropB = Seq((3L, 10L), (20L, 21L)).toDF("src", "dst")
+    GraphAlgos.ccIncremental(dropA, cc).count()
+    GraphAlgos.ccIncremental(dropB, cc).count()
+    crashAfterLedger(cc, "labels")
+    // invisible to reads: only drop A's canonical edges are committed
+    assert(lastIs(cc, 0))
+    assert(StateStore.readAsOf(spark, cc, "ids", Int.MaxValue)
+      .select("src", "dst").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 2L), (2L, 3L), (10L, 11L)))
+    // invisible to the next ingest: the retry finds drop B fresh (the
+    // crashed bloom is never folded), lands on the same inc_1, and the
+    // labels equal a one-shot CC over both drops
+    val afterB = labels(GraphAlgos.ccIncremental(dropB, cc))
+    assert(lastIs(cc, 1))
+    assert(afterB == labels(GraphAlgos.connectedComponents(
+      graft.sources.GraphStore(
+        Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L).toDF("id"),
+        dropA.union(dropB)))))
+    // the retried ledger blocks a re-present
+    assert(labels(GraphAlgos.ccIncremental(dropB, cc)) == afterB)
+    assert(lastIs(cc, 1))
+    // ---- ivfIncremental ----
+    def rows(df: DataFrame): Seq[(Long, Long, Double, Int)] =
+      df.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
+        .sortBy(t => (t._1, t._4))
+    val ivf = tmpState("ivf_crash")
+    val q = embs.filter(col("vec_id") < 5)
+    val odds = embs.filter(col("vec_id") % 2 === 1)
+    SimilarityOps.ivfIncremental(
+      embs.filter(col("vec_id") % 2 === 0), ivf).count()
+    val beforeCrash = rows(SimilarityOps.ivfIncrementalTopK(q, ivf,
+      nprobe = 4, k = 5))
+    SimilarityOps.ivfIncremental(odds, ivf).count()
+    crashAfterLedger(ivf, "postings")
+    assert(lastIs(ivf, 0))
+    assert(rows(SimilarityOps.ivfIncrementalTopK(q, ivf,
+      nprobe = 4, k = 5)) == beforeCrash)
+    // the retry ingests every odd id on the same inc_1 and answers like
+    // the one-shot IVF over the union with the frozen centroids
+    assert(SimilarityOps.ivfIncremental(odds, ivf).count() == odds.count())
+    assert(lastIs(ivf, 1))
+    val stored = spark.read
+      .parquet(StateStore.committed(spark, ivf).head + "/centroids")
+      .collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Double](1).toArray)
+    assert(rows(SimilarityOps.ivfIncrementalTopK(q, ivf,
+        nprobe = 4, k = 5)) ==
+      rows(SimilarityOps.ivfTopK(q, embs, stored, nprobe = 4, k = 5)))
+    assert(SimilarityOps.ivfIncremental(odds, ivf).count() == 0)
+    assert(lastIs(ivf, 1))
+    // ---- binaryHammingIncremental ----
+    def hrows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
+      .sortBy(t => (t._1, t._4))
+    val bh = tmpState("bh_crash")
+    val evens = embs.filter(col("vec_id") % 2 === 0)
+    val evensOnly = hrows(
+      SimilarityOps.binaryHammingIncremental(q, evens, bh, k = 5))
+    SimilarityOps.binaryHammingIncremental(q, odds, bh, k = 5).count()
+    crashAfterLedger(bh, "sigs")
+    // a re-presented drop is a pure query over the committed dirs only
+    assert(hrows(SimilarityOps.binaryHammingIncremental(q, evens, bh,
+      k = 5)) == evensOnly)
+    assert(lastIs(bh, 0))
+    assert(hrows(SimilarityOps.binaryHammingIncremental(q, odds, bh,
+      k = 5)) == hrows(SimilarityOps.binaryHammingTopK(q, embs, k = 5)))
+    assert(lastIs(bh, 1))
+    StateStore.delete(cc); StateStore.delete(ivf); StateStore.delete(bh)
+  }
+
   test("ivfRefit: post-refit state == one-shot with the new centroids") {
     def rows(df: DataFrame): Seq[(Long, Long, Double, Int)] =
       df.collect().map(r =>
