@@ -4,9 +4,10 @@ import graft.SparkSpec
 import graft.sources.GraphStore
 
 /**
- * Golden queries over the reference's own 6-vertex "modern" sample graph
- * (`/root/reference/data/`, expected values hand-derived from Gremlin
- * semantics — FIXTURES.md §A.3).
+ * Golden queries over the reference's own 6-vertex "modern" sample graph,
+ * built in memory by `GraphStore.modern` (FIXTURES.md §A.2; expected values
+ * hand-derived from Gremlin semantics — FIXTURES.md §A.3). The text-format
+ * ETL of the same graph is checked by `GraphStoreSpec`.
  */
 class GremlinSpec extends SparkSpec {
 
