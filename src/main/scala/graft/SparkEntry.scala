@@ -52,10 +52,12 @@ object SparkEntry {
       // Serve with the reference's indexes pre-built (IndexExpert at
       // boot): selective leading filters seed from posting lists, the
       // rest falls back to the (cached, pushed-down) scan via the 20%
-      // selectivity gate — both paths are oracle-checked.
+      // selectivity gate — both paths are oracle-checked. Built by DDL,
+      // as a served graph is, so the light lane's adjacency store is
+      // built too.
       Seq("label", "mktsegment", "nationkey", "name", "brand", "size")
-        .foreach(k => gr.index.build(gr.graph, isVertex = true, k))
-      gr.index.build(gr.graph, isVertex = false, "quantity")
+        .foreach(k => gr.ddl(s"BuildIndex(V, '$k')"))
+      gr.ddl("BuildIndex(E, 'quantity')")
       gr
     })
 

@@ -37,7 +37,8 @@ final case class CompileException(msg: String) extends Exception(msg)
  *
  * Property access re-attaches the element's columns by an equi-join on
  * id — the Spark analogue of the reference's RDMA point-reads
- * (`storage/vkvstore.cpp:153-166`). When the frontier came straight from
+ * (`storage/vkvstore.cpp:153-166`); on the light lane, by lookups into
+ * the [[AdjacencyStore]] instead. When the frontier came straight from
  * the table scan the columns are already attached and no join happens,
  * which is how `g.V().has(...)` compiles to a plain pushed-down scan.
  */
@@ -72,12 +73,13 @@ object Compiler {
       distinctVal: Boolean = false,
       // light lane (APC): an upper bound on this stream's rows, known
       // for an index-seeded frontier and carried step by step
-      // ([[laneBound]]); None off the lane. Joins broadcast the
-      // traverser side while `bound × row width` fits the broadcast
-      // threshold ([[traverser]]).
+      // ([[laneBound]]); None off the lane. Hops and attaches read the
+      // adjacency store while `bound × row width` fits the broadcast
+      // threshold ([[laneStore]]).
       bound: Option[Long] = None,
-      // per-(edge label, direction) max degrees: the hop multiplier
-      degrees: Option[Degrees] = None) {
+      // the graph's adjacency store: the hop multiplier (max degrees)
+      // and the lane's hop/attach lookups
+      adj: Option[AdjacencyStore] = None) {
     /** Columns that must survive every transformation. */
     def auxCols: Seq[String] =
       history.keys.map(h => s"__as_$h").toSeq ++
@@ -85,52 +87,13 @@ object Compiler {
   }
 
   /** `light`: the query compiled on the light lane — index-seeded,
-    * every join broadcasts the traverser side, and no step's rows
-    * depend on partition order — so it may run in a narrow AQE-off
-    * session ([[Graft]]). */
+    * every hop and attach a lookup into the adjacency store (no join
+    * against a graph table), and no step's rows depend on partition
+    * order — so it may run in a narrow AQE-off session ([[Graft]]). */
   final case class Result(df: DataFrame, kind: Kind,
                           ordering: Seq[(String, Boolean)],
                           sideEffects: Map[String, (DataFrame, Kind)],
                           light: Boolean = false)
-
-  /** Max out-/in-degree per edge label over the whole graph — the light
-    * lane's hop multiplier. Exact maxima, so `bound × hop` is an upper
-    * bound on a hop's output (the IndexStore never-underestimate rule). */
-  final case class Degrees(max: Map[(String, Boolean), Long]) {
-    /** Upper bound on the edges one vertex reaches along `labels` (every
-      * label when empty) in direction `dir`. */
-    def hop(dir: Step.Dir, labels: Seq[String]): Long = {
-      def side(out: Boolean): Long =
-        (if (labels.nonEmpty) labels.distinct.map(l => (l, out))
-         else max.keys.filter(_._2 == out))
-          .map(max.getOrElse(_, 0L)).sum
-      dir match {
-        case Step.Out  => side(out = true)
-        case Step.In   => side(out = false)
-        case Step.Both => side(out = true) + side(out = false)
-      }
-    }
-  }
-
-  object Degrees {
-    /** ONE aggregation job over the edge table: per (label, direction,
-      * vertex) degree, then the max per (label, direction). Runs in the
-      * parent-width narrow session, where the two exchanges are stages
-      * of one job (AQE would run each as a job of its own). Meant for
-      * DDL time — never call it from compile. */
-    def of(graph: GraphStore): Degrees = {
-      val spark = graph.edges.sparkSession
-      def ends(out: Boolean, v: String): DataFrame = graph.edges
-        .select(col("label"), lit(out).as("out"), col(v).as("v"))
-      val maxes = ends(out = true, "src").unionByName(ends(out = false, "dst"))
-        .groupBy("label", "out", "v").count()
-        .groupBy("label", "out").agg(max(col("count")))
-      val narrow = graft.NarrowSession(spark,
-        spark.sessionState.conf.numShufflePartitions)
-      Degrees(org.apache.spark.sql.SessionRebind(maxes, narrow).collect()
-        .map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2)).toMap)
-    }
-  }
 
   /** A light-lane compile hit a step or join the lane cannot carry; the
     * query recompiles on the plain path. */
@@ -162,34 +125,38 @@ object Compiler {
     * tries the light lane first. */
   def compileSeeded(graph: GraphStore, frontier: DataFrame,
                     steps: List[Step], bound: Option[Long],
-                    degrees: Option[Degrees]): Result =
+                    adj: Option[AdjacencyStore]): Result =
     // posting lists hold one row per element (intersections/unions of
     // per-value postings of one key stay element-unique)
     seeded(graph, State(frontier.select(col("id").as("__val")), VertexKind,
       attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil, distinctVal = true), steps, bound, degrees)
+      Map.empty, None, Nil, distinctVal = true), steps, bound, adj)
 
   /** Compile with a pre-computed edge frontier (`src, dst, label`) —
     * the edge side of InitWithIndex (`expert/init_expert.hpp:199-234`
     * serves both element types). */
   def compileSeededEdges(graph: GraphStore, frontier: DataFrame,
                          steps: List[Step], bound: Option[Long],
-                         degrees: Option[Degrees]): Result =
+                         adj: Option[AdjacencyStore]): Result =
     seeded(graph, State(frontier.select(edgeStruct().as("__val")), EdgeKind,
       attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil, distinctVal = true), steps, bound, degrees)
+      Map.empty, None, Nil, distinctVal = true), steps, bound, adj)
 
   /** The light lane first (when a bound is known), else — or when the
     * lane ends mid-query — the plain compile. A lane attempt is pure
     * driver work (it ends BEFORE any eager step), so the retry runs no
-    * job, and a heavy query's plan is exactly the plain path's. */
+    * job, and a heavy query's plan is exactly the plain path's. The lane
+    * reads its seed in ONE partition (a narrow coalesce): the whole
+    * light query is then one task, with no exchange before its
+    * aggregate — APC's "light stays on one thread". */
   private def seeded(graph: GraphStore, init: State, steps: List[Step],
-                     bound: Option[Long], degrees: Option[Degrees]): Result = {
+                     bound: Option[Long], adj: Option[AdjacencyStore]): Result = {
     def run(s0: State): State =
       steps.foldLeft(s0)((s, step) => apply(graph, s, step))
     val lane =
       if (bound.isEmpty) None
-      else try Some(run(init.copy(bound = bound, degrees = degrees)))
+      else try Some(run(init.copy(df = init.df.coalesce(1), bound = bound,
+        adj = adj)))
       catch { case LaneEnd => None }
     val out = lane.getOrElse(run(init))
     Result(out.df, out.kind, out.ordering, out.sideEffects,
@@ -216,31 +183,35 @@ object Compiler {
     struct(col(s"${prefix}src").as("src"), col(s"${prefix}dst").as("dst"),
       col(s"${prefix}label").as("label"))
 
-  /** The traverser side of a join. On the light lane it is hinted for
-    * broadcast when `bound × row width` fits the graph session's
-    * `spark.sql.autoBroadcastJoinThreshold` — the planner would
-    * otherwise broadcast the cached graph table, since it estimates a
-    * join's output as the product of its inputs. A lane join that does
-    * not fit ends the lane. */
-  private def traverser(graph: GraphStore, s: State): DataFrame =
-    s.bound match {
-      case None => s.df
-      case Some(b) =>
-        val threshold = graph.vertices.sparkSession.sessionState.conf
-          .autoBroadcastJoinThreshold
-        // Spark's own row-size estimate: 8 bytes of row overhead + the
-        // columns' default sizes
-        val width = 8L + s.df.schema.defaultSize
-        if (threshold > 0 && b <= threshold / width) broadcast(s.df)
-        else throw LaneEnd
+  /** The store a light-lane hop or attach reads, None off the lane. The
+    * lane's light/heavy test: the traverser side, `bound × row width`,
+    * must fit the graph session's `spark.sql.autoBroadcastJoinThreshold`.
+    * A lane step that does not fit, or a graph without a store, ends the
+    * lane. */
+  private def laneStore(graph: GraphStore, s: State): Option[AdjacencyStore] =
+    s.bound.map { b =>
+      val threshold = graph.vertices.sparkSession.sessionState.conf
+        .autoBroadcastJoinThreshold
+      // Spark's own row-size estimate: 8 bytes of row overhead + the
+      // columns' default sizes
+      val width = 8L + s.df.schema.defaultSize
+      if (threshold > 0 && b <= threshold / width)
+        s.adj.getOrElse(throw LaneEnd)
+      else throw LaneEnd
     }
 
-  /** Re-attach element property columns (join on id) if absent. */
+  /** Re-attach element property columns (join on id, or store lookups
+    * on the light lane) if absent. */
   private def ensureAttached(graph: GraphStore, s: State): State = {
     if (s.attached) return s
-    val left = traverser(graph, s)
-    s.kind match {
-      case VertexKind =>
+    val left = s.df
+    (s.kind, laneStore(graph, s)) match {
+      case (_: ScalarKind, _) =>
+        throw CompileException("cannot read properties of a scalar stream")
+      case (kind, Some(adj)) =>
+        s.copy(df = adj.attach(left, s.auxCols, kind == VertexKind),
+          attached = true)
+      case (VertexKind, None) =>
         val a = freshAlias("__v")
         val v = graph.vertices.alias(a)
         val joined = left.join(v, left("__val") === col(s"$a.id"))
@@ -248,7 +219,7 @@ object Compiler {
           (col(s"$a.label").as("label") +:
             graph.vertexKeys.map(k => col(s"$a.$k").as(k)))
         s.copy(df = joined.select(keep: _*), attached = true)
-      case EdgeKind =>
+      case (EdgeKind, None) =>
         val a = freshAlias("__e")
         val e = graph.edges.alias(a)
         val joined = left.join(e,
@@ -260,8 +231,6 @@ object Compiler {
         val keep = col("__val") +: s.auxCols.map(col) ++:
           graph.edgeKeys.map(k => col(s"$a.$k").as(k))
         s.copy(df = joined.select(keep: _*), attached = true)
-      case ScalarKind(_) =>
-        throw CompileException("cannot read properties of a scalar stream")
     }
   }
 
@@ -331,8 +300,8 @@ object Compiler {
            _: PathStep | _: Aggregate | Values(Seq(_)) => Some(b)
       case EtoV(Both) => times(2)
       case _: EtoV => Some(b)
-      case VtoV(dir, labels) => s.degrees.flatMap(d => times(d.hop(dir, labels)))
-      case VtoE(dir, labels) => s.degrees.flatMap(d => times(d.hop(dir, labels)))
+      case VtoV(dir, labels) => s.adj.flatMap(a => times(a.hop(dir, labels)))
+      case VtoE(dir, labels) => s.adj.flatMap(a => times(a.hop(dir, labels)))
       case _: Count | _: MathStep if s.groupCol.isEmpty => Some(1L)
       case Dedup(Seq()) if s.auxCols.isEmpty => Some(b)
       case _ => None
@@ -979,31 +948,34 @@ object Compiler {
   /** out/in/both × (V→V | V→E): the only mandatory shuffle in the
     * reference (`send_remote`, parser.cpp:1414) — here a plain equi-join
     * that Catalyst/AQE turns into broadcast or shuffle join as sizes
-    * dictate (on the light lane: the traverser side broadcast). */
+    * dictate (on the light lane: an explode of adjacency-store
+    * lookups, no join). */
   private def traverse(graph: GraphStore, s0: State, dir: Step.Dir,
                        labels: Seq[String], emitEdge: Boolean): State = {
     import Step._
     if (s0.kind != VertexKind)
       throw CompileException("out/in/both need a vertex stream")
     val s = detach(s0)
-    val a = freshAlias("__e")
-    var e = graph.edges.select(col("src"), col("dst"), col("label"))
-    if (labels.nonEmpty) e = e.filter(col("label").isin(labels: _*))
-    val ea = e.alias(a)
-    val left = traverser(graph, s)
-
-    def hop(joinOn: String, emit: String): DataFrame = {
-      val joined = left.join(ea, left("__val") === col(s"$a.$joinOn"))
-      val newVal =
-        if (emitEdge) struct(col(s"$a.src").as("src"),
-          col(s"$a.dst").as("dst"), col(s"$a.label").as("label"))
-        else col(s"$a.$emit")
-      joined.select((newVal.as("__val") +: s.auxCols.map(col)): _*)
-    }
-    val df = dir match {
-      case Out  => hop("src", "dst")
-      case In   => hop("dst", "src")
-      case Both => hop("src", "dst").unionByName(hop("dst", "src"))
+    val df = laneStore(graph, s) match {
+      case Some(adj) => adj.traverse(s.df, s.auxCols, dir, labels, emitEdge)
+      case None =>
+        val a = freshAlias("__e")
+        var e = graph.edges.select(col("src"), col("dst"), col("label"))
+        if (labels.nonEmpty) e = e.filter(col("label").isin(labels: _*))
+        val ea = e.alias(a)
+        def hop(joinOn: String, emit: String): DataFrame = {
+          val joined = s.df.join(ea, s.df("__val") === col(s"$a.$joinOn"))
+          val newVal =
+            if (emitEdge) struct(col(s"$a.src").as("src"),
+              col(s"$a.dst").as("dst"), col(s"$a.label").as("label"))
+            else col(s"$a.$emit")
+          joined.select((newVal.as("__val") +: s.auxCols.map(col)): _*)
+        }
+        dir match {
+          case Out  => hop("src", "dst")
+          case In   => hop("dst", "src")
+          case Both => hop("src", "dst").unionByName(hop("dst", "src"))
+        }
     }
     s.copy(df = df, kind = if (emitEdge) EdgeKind else VertexKind,
       attached = false, distinctVal = false)

@@ -37,11 +37,14 @@ final case class Graft(graph: GraphStore) {
     * `stealing`, …) are recorded but subsumed by Catalyst/AQE. */
   @volatile var config: Map[String, String] = Map.empty
 
-  /** Per-(edge label, direction) max degrees — the light lane's hop
-    * multiplier. ONE aggregation job at the first `BuildIndex` DDL
-    * (indexes are what seed the lane), never at compile. */
-  @volatile private var degrees: Option[Compiler.Degrees] = None
-  private val degreesLock = new Object
+  /** The light lane's adjacency store: its hops, attaches and max
+    * degrees. Built once, at the first `BuildIndex` DDL (indexes are
+    * what seed the lane), never at compile; None before that, and for
+    * good when the graph does not fit the store
+    * ([[AdjacencyStore.build]]). */
+  @volatile private var adjacency: Option[AdjacencyStore] = None
+  private lazy val builtAdjacency = AdjacencyStore.build(graph)
+  private[gremlin] def adjacencyStore: Option[AdjacencyStore] = adjacency
 
   /** A toggle is on unless explicitly set to false/0 (reference default:
     * all optimizations enabled, `utils/config.hpp`). */
@@ -59,9 +62,7 @@ final case class Graft(graph: GraphStore) {
     case BuildIndexRe(ve, key) =>
       val isV = ve.equalsIgnoreCase("V")
       index.build(graph, isV, key)
-      if (degrees.isEmpty) degreesLock.synchronized {
-        if (degrees.isEmpty) degrees = Some(Compiler.Degrees.of(graph))
-      }
+      adjacency = builtAdjacency
       Some(s"Index built for ${ve.toUpperCase}.$key")
     case SetConfigRe(k, v) =>
       config += k -> v
@@ -85,14 +86,14 @@ final case class Graft(graph: GraphStore) {
         foldIndex(isVertex = true, rest) match {
           case Some(((frontier, bound), remaining)) =>
             Compiler.compileSeeded(graph, frontier, remaining, Some(bound),
-              degrees)
+              adjacency)
           case scala.None => Compiler.compile(graph, steps)
         }
       case Step.E() :: rest if enabled("indexing") =>
         foldIndex(isVertex = false, rest) match {
           case Some(((frontier, bound), remaining)) =>
             Compiler.compileSeededEdges(graph, frontier, remaining,
-              Some(bound), degrees)
+              Some(bound), adjacency)
           case scala.None => Compiler.compile(graph, steps)
         }
       case _ => Compiler.compile(graph, steps)
@@ -184,10 +185,10 @@ final case class Graft(graph: GraphStore) {
 
   /** APC's "light stays single-threaded": a light query's finished plan
     * is re-planned in the graph session's width-1 AQE-off child — one
-    * driver job per query plus one per broadcast, instead of one per
-    * exchange under AQE. The cached graph and postings are found
-    * through the shared CacheManager; nothing is re-cached. Heavy
-    * queries keep the parent session. */
+    * driver job per query (a postings scan, adjacency-store lookups and
+    * the aggregate), instead of one per exchange under AQE. The cached
+    * postings are found through the shared CacheManager; nothing is
+    * re-cached. Heavy queries keep the parent session. */
   private def finish(r: Compiler.Result): DataFrame = {
     val ordered = Compiler.applyOrdering(r.df, r.ordering)
     val out = r.kind match {

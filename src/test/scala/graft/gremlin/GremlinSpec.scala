@@ -443,8 +443,8 @@ class GremlinSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // index-seeded hop + attach: the light lane (traverser broadcast
-      // hints; max degrees were computed at BuildIndex) — compiling AND
+      // index-seeded hop + attach: the light lane (adjacency-store
+      // lookups; the store was built at BuildIndex) — compiling AND
       // rebinding the finished plan into the narrow session stay job-free
       val light = "g.V().hasLabel('person').has('name', 'marko')" +
         ".out('knows').values('name')"
@@ -461,8 +461,8 @@ class GremlinSpec extends SparkSpec {
       // localCheckpoint path must also stay job-free at compile
       gi.compile("g.V().hasLabel('person').out('knows')" +
         ".and(out('created')).count()")
-      // listener bus is async — give it time to surface any job event
-      Thread.sleep(1500)
+      // listener bus is async — wait until every posted event is delivered
+      org.apache.spark.scheduler.ListenerDrain(spark.sparkContext)
       assert(counter.get() == 0,
         "query compilation must not launch Spark jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
