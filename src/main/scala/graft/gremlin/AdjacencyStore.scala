@@ -411,12 +411,13 @@ object AdjacencyStore {
       }
       if (vertex) scan(d.vertexIndex, v.asInstanceOf[Long])(_ => true)
       else {
+        // an edge stream's (src, dst, label) is never null: a store
+        // exists only for edges with non-null endpoints and labels
         val e = v.asInstanceOf[InternalRow]
-        if (!e.isNullAt(0) && !e.isNullAt(1) && !e.isNullAt(2))
-          labelIndex.get(e.getUTF8String(2)).foreach { l =>
-            val to = e.getLong(1)
-            scan(d.edges.out(l), e.getLong(0))(d.edges.dst(_) == to)
-          }
+        labelIndex.get(e.getUTF8String(2)).foreach { l =>
+          val to = e.getLong(1)
+          scan(d.edges.out(l), e.getLong(0))(d.edges.dst(_) == to)
+        }
       }
       ArrayData.toArrayData(acc.result())
     }
