@@ -77,8 +77,9 @@ object Emu {
     // pre-instantiate the full workload deterministically
     val workload = (0 until iterations).map(i =>
       instantiate(templates(i % templates.length), pools, rand))
+    // what Server serves: the console rendering of each answer
     closedLoop("throughput", workload, concurrency) { () =>
-      q => { g.df(q).count(); true }
+      q => { g.strings(q); true }
     }
     spark.stop()
   }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
  *
  * Users: `StateStore.maint` (the parent's width), SCC small mode and
  * peel migration (`GraphAlgos`, the loop's adaptive width), and the
- * Gremlin light lane (`Graft`, width 1 — APC's "light queries stay
- * single-threaded").
+ * Gremlin light lane (`Graft`, width 1: a light query's driver-computed
+ * rows come back as a local relation of this session).
  *
  * `newSession()` isolates the conf: no caller mutates a session-global
  * setting that concurrent queries under Server/Emu would see. The child

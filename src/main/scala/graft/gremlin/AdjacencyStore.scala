@@ -3,12 +3,8 @@ package graft.gremlin
 import java.util.{Arrays, BitSet}
 import scala.collection.mutable
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{ColumnIntrospection => CI, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,29 +26,27 @@ import graft.sources.GraphStore
  *    vertex key including `label`.
  * A string column keeps each distinct value once.
  *
- * Built ONCE per [[Graft]], at its first `BuildIndex` DDL, and shared
- * as a Spark `Broadcast`; it is built only when its estimated bytes fit
- * the graph session's `spark.sql.maxBroadcastTableSize`. A light-lane
- * hop is an explode of a neighbour lookup ([[Hop]]) and an attach is an
- * explode of a row lookup ([[Rows]]) plus one [[Prop]] lookup per key,
- * so Catalyst prunes the keys a query never reads. The expressions
- * carry the `Broadcast` HANDLE (the `BloomContainsBc` pattern), never
- * the store itself: a task closure stays constant-size and each
- * executor dereferences its local block once. The results equal the
- * plain path's joins row for row: a missing traverser id attaches to
- * nothing (the inner join drops it), `both()` is out ∪ in (a self-loop
- * comes back twice), no labels means every label, and an absent
- * property reads as null.
+ * Built ONCE per [[Graft]], at its first `BuildIndex` DDL, and held on
+ * the driver, where [[LightLane]] walks it; it is built only when its
+ * estimated bytes fit the graph session's
+ * `spark.sql.maxBroadcastTableSize`. Its lookups equal the plain
+ * path's joins row for row: a missing id has no rows (the inner join
+ * drops it), `both()` is out ∪ in (a self-loop comes back twice), no
+ * labels means every label, and an absent property reads as null.
  */
 final class AdjacencyStore private (
-    bc: Broadcast[AdjacencyStore.Data],
-    edgeLabels: IndexedSeq[String],
-    maxDegree: Map[(String, Boolean), Long],
-    vertexCols: Seq[(String, DataType)],
-    edgeCols: Seq[(String, DataType)],
+    vertexIndex: AdjacencyStore.Csr,
+    vertexCols: Map[String, AdjacencyStore.Col],
+    edges: AdjacencyStore.Edges,
+    edgeCols: Map[String, AdjacencyStore.Col],
     /** heap bytes of the store's arrays */
     val bytes: Long) {
   import AdjacencyStore._
+
+  private val maxDegree: Map[(String, Boolean), Long] =
+    edges.labels.indices.flatMap(l => Seq(
+      (edges.labels(l), true) -> edges.out(l).maxDegree.toLong,
+      (edges.labels(l), false) -> edges.in(l).maxDegree.toLong)).toMap
 
   /** Upper bound on the edges one vertex reaches along `labels` (every
     * label when empty) in direction `dir`: the sum of exact max degrees,
@@ -70,38 +64,56 @@ final class AdjacencyStore private (
     }
   }
 
-  /** out/in/both (V→V, or V→E with `emitEdge`) from the vertex ids in
-    * `__val`: one row per matching edge row, `aux` columns kept. */
-  def traverse(df: DataFrame, aux: Seq[String], dir: Step.Dir,
-               labels: Seq[String], emitEdge: Boolean): DataFrame = {
-    val ls =
-      if (labels.isEmpty) edgeLabels.indices
-      else labels.distinct.map(edgeLabels.indexOf(_)).filter(_ >= 0)
-    val nbrs = Hop(CI.expression(col("__val")), bc, ls,
-      out = dir != Step.In, in = dir != Step.Out, emitEdge)
-    df.select((explode(CI.column(nbrs)).as("__val") +: aux.map(col)): _*)
+  /** The store indices of the edge labels `labels`; every label when
+    * empty, none for a label the graph lacks. */
+  def labelIndices(labels: Seq[String]): Seq[Int] =
+    if (labels.isEmpty) edges.labels.indices
+    else labels.distinct.map(edges.labels.indexOf(_)).filter(_ >= 0)
+
+  /** Each edge row of vertex `id` along the label indices `ls`: out-edges
+    * (`dst`, or the edge with `emitEdge`) when `out`, then in-edges
+    * (`src`) when `in`. */
+  def neighbours(id: Long, ls: Seq[Int], out: Boolean, in: Boolean,
+                 emitEdge: Boolean)(f: Any => Unit): Unit = {
+    def walk(csrs: Array[Csr], far: Array[Long]): Unit = ls.foreach { l =>
+      val c = csrs(l)
+      val k = c.find(id)
+      if (k >= 0) {
+        var p = c.offsets(k)
+        while (p < c.offsets(k + 1)) {
+          val r = c.rows(p)
+          f(if (emitEdge) LightLane.Edge(edges.src(r), edges.dst(r),
+              edges.labels(l))
+            else far(r))
+          p += 1
+        }
+      }
+    }
+    if (out) walk(edges.out, edges.dst)
+    if (in) walk(edges.in, edges.src)
   }
 
-  /** The element's property columns — `label` and the vertex keys, or
-    * the edge keys — next to `__val` and `aux`, one row per matching
-    * table row (none for an id the table lacks). */
-  def attach(df: DataFrame, aux: Seq[String], vertex: Boolean): DataFrame = {
-    val kept = col("__val") +: aux.map(col)
-    val row = Rows(CI.expression(col("__val")), bc, vertex)
-    val props = (if (vertex) vertexCols else edgeCols).zipWithIndex.map {
-      case ((k, dt), i) =>
-        CI.column(Prop(CI.expression(col("__row")), bc, vertex, i, dt)).as(k)
-    }
-    df.select((kept :+ explode(CI.column(row)).as("__row")): _*)
-      .select((kept ++ props): _*)
+  /** The vertex table rows of `id`: none, one, or duplicates. */
+  def vertexRows(id: Long)(f: Int => Unit): Unit =
+    vertexIndex.rowsOf(id)(f)
+
+  /** The edge table rows of an edge `(src, dst, label)`. */
+  def edgeRows(e: LightLane.Edge)(f: Int => Unit): Unit = {
+    val l = edges.labels.indexOf(e.label)
+    if (l >= 0) edges.out(l).rowsOf(e.src)(r => if (edges.dst(r) == e.dst) f(r))
   }
+
+  /** A vertex key's column (`label` included), by vertex table row. */
+  def vertexColumn(key: String): Col = vertexCols(key)
+  /** An edge key's column, by edge table row. */
+  def edgeColumn(key: String): Col = edgeCols(key)
 }
 
 object AdjacencyStore {
 
-  /** Property types the store can hold; a graph with any other type on
-    * a vertex or edge key gets no store. */
-  private val Held: Set[DataType] =
+  /** Property types the store (and the driver postings) can hold; a
+    * graph with any other type on a vertex or edge key gets no store. */
+  private[gremlin] val Held: Set[DataType] =
     Set(IntegerType, LongType, DoubleType, StringType)
 
   private def vertexTypes(graph: GraphStore): Seq[(String, DataType)] =
@@ -154,13 +166,10 @@ object AdjacencyStore {
         (Seq("src", "dst", "label") ++ eTypes.map(_._1)).map(col): _*))(
         edgeSide(eTypes.map(_._2)))))
     edgeHalf.map { edges =>
-      val data = new Data(vertexHalf._1, vertexHalf._2, edges)
-      val bc = spark.sparkContext.broadcast(data)
-      val maxDegree = edges.labels.indices.flatMap(l => Seq(
-        (edges.labels(l), true) -> edges.out(l).maxDegree.toLong,
-        (edges.labels(l), false) -> edges.in(l).maxDegree.toLong)).toMap
-      new AdjacencyStore(bc, edges.labels.toIndexedSeq, maxDegree, vTypes,
-        eTypes, data.bytes)
+      val (index, vCols) = vertexHalf
+      new AdjacencyStore(index, vTypes.map(_._1).zip(vCols).toMap, edges,
+        eTypes.map(_._1).zip(edges.cols).toMap,
+        index.bytes + vCols.map(_.bytes).sum + edges.bytes)
     }
   }
 
@@ -230,6 +239,14 @@ object AdjacencyStore {
                   val rows: Array[Int]) extends Serializable {
     /** Index of `v` in `keys`, negative when absent. */
     def find(v: Long): Int = Arrays.binarySearch(keys, v)
+    /** `f` over the table rows whose key is `v`. */
+    def rowsOf(v: Long)(f: Int => Unit): Unit = {
+      val k = find(v)
+      if (k >= 0) {
+        var p = offsets(k)
+        while (p < offsets(k + 1)) { f(rows(p)); p += 1 }
+      }
+    }
     def maxDegree: Int =
       keys.indices.map(k => offsets(k + 1) - offsets(k)).maxOption.getOrElse(0)
     def bytes: Long = 8L * keys.length + 4L * (offsets.length + rows.length)
@@ -298,10 +315,10 @@ object AdjacencyStore {
 
   /** A string column: per row a code into the distinct values, -1 for
     * null. */
-  final class Dict(codes: Array[Int], values: Array[UTF8String])
+  final class Dict(codes: Array[Int], values: Array[String])
       extends Col {
     def get(row: Int): Any = if (codes(row) < 0) null else values(codes(row))
-    def bytes: Long = 4L * codes.length + values.map(16L + _.numBytes).sum
+    def bytes: Long = 4L * codes.length + values.map(40L + 2L * _.length).sum
   }
 
   private final class ColBuilder(dt: DataType) {
@@ -309,7 +326,7 @@ object AdjacencyStore {
     private val nulls = new BitSet
     private val codes = new mutable.ArrayBuilder.ofInt
     private val index = new java.util.HashMap[UTF8String, Integer]
-    private val values = mutable.ArrayBuffer.empty[UTF8String]
+    private val values = mutable.ArrayBuffer.empty[String]
     private var n = 0
     private val kind = if (dt == StringType) 0 else kindOf(dt)
 
@@ -321,8 +338,7 @@ object AdjacencyStore {
           val c = index.get(s)
           if (c != null) c.intValue
           else {
-            val own = s.copy()
-            index.put(own, values.size); values += own
+            index.put(s.copy(), values.size); values += s.toString
             values.size - 1
           }
         })
@@ -348,92 +364,5 @@ object AdjacencyStore {
       extends Serializable {
     def bytes: Long = (out ++ in).map(_.bytes).sum +
       8L * (src.length + dst.length) + cols.map(_.bytes).sum
-  }
-
-  /** The broadcast payload. */
-  final class Data(val vertexIndex: Csr, val vertexCols: Array[Col],
-                   val edges: Edges) extends Serializable {
-    def bytes: Long =
-      vertexIndex.bytes + vertexCols.map(_.bytes).sum + edges.bytes
-  }
-
-  private val EdgeType = StructType(Seq(
-    StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false),
-    StructField("label", StringType, nullable = false)))
-
-  /** A vertex id's neighbours along the edge labels `labels` (store
-    * indices): out-edges give `dst`, in-edges `src`, or with `emitEdge`
-    * the edge `(src, dst, label)`; one element per edge row. */
-  case class Hop(child: Expression, bc: Broadcast[Data], labels: Seq[Int],
-                 out: Boolean, in: Boolean, emitEdge: Boolean)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType =
-      ArrayType(if (emitEdge) EdgeType else LongType, containsNull = false)
-    @transient private lazy val e = bc.value.edges
-    @transient private lazy val names = e.labels.map(UTF8String.fromString)
-    override def nullSafeEval(v: Any): Any = {
-      val id = v.asInstanceOf[Long]
-      val acc = mutable.ArrayBuffer.empty[Any]
-      def walk(csrs: Array[Csr], far: Array[Long]): Unit = labels.foreach { l =>
-        val c = csrs(l)
-        val k = c.find(id)
-        if (k >= 0) (c.offsets(k) until c.offsets(k + 1)).foreach { p =>
-          val r = c.rows(p)
-          acc += (if (emitEdge) InternalRow(e.src(r), e.dst(r), names(l))
-                  else far(r))
-        }
-      }
-      if (out) walk(e.out, e.dst)
-      if (in) walk(e.in, e.src)
-      new GenericArrayData(acc.toArray)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** The table rows of a vertex id, or of an edge `(src, dst, label)`:
-    * as many as the table holds (none, one, or duplicates). */
-  case class Rows(child: Expression, bc: Broadcast[Data], vertex: Boolean)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType =
-      ArrayType(IntegerType, containsNull = false)
-    @transient private lazy val d = bc.value
-    @transient private lazy val labelIndex: Map[UTF8String, Int] =
-      d.edges.labels.map(UTF8String.fromString).zipWithIndex.toMap
-    override def nullSafeEval(v: Any): Any = {
-      val acc = new mutable.ArrayBuilder.ofInt
-      def scan(c: Csr, key: Long)(keep: Int => Boolean): Unit = {
-        val k = c.find(key)
-        if (k >= 0) (c.offsets(k) until c.offsets(k + 1)).foreach { p =>
-          if (keep(c.rows(p))) acc += c.rows(p)
-        }
-      }
-      if (vertex) scan(d.vertexIndex, v.asInstanceOf[Long])(_ => true)
-      else {
-        // an edge stream's (src, dst, label) is never null: a store
-        // exists only for edges with non-null endpoints and labels
-        val e = v.asInstanceOf[InternalRow]
-        labelIndex.get(e.getUTF8String(2)).foreach { l =>
-          val to = e.getLong(1)
-          scan(d.edges.out(l), e.getLong(0))(d.edges.dst(_) == to)
-        }
-      }
-      ArrayData.toArrayData(acc.result())
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Column `col` of the vertex (or edge) table at a row from [[Rows]]. */
-  case class Prop(child: Expression, bc: Broadcast[Data], vertex: Boolean,
-                  col: Int, dataType: DataType)
-      extends UnaryExpression with CodegenFallback {
-    override def nullable: Boolean = true
-    @transient private lazy val c =
-      if (vertex) bc.value.vertexCols(col) else bc.value.edges.cols(col)
-    override def nullSafeEval(row: Any): Any = c.get(row.asInstanceOf[Int])
-    override protected def withNewChildInternal(x: Expression): Expression =
-      copy(child = x)
   }
 }

@@ -14,6 +14,12 @@ final case class ScalarKind(dt: DataType) extends Kind
 
 final case class CompileException(msg: String) extends Exception(msg)
 
+/** A compiled query: a Catalyst plan ([[Compiler.Result]]) or a query
+  * the light lane answers on the driver ([[LightLane.Plan]]). */
+trait Compiled {
+  def light: Boolean
+}
+
 /**
  * Compiles a `List[Step]` into a DataFrame plan.
  *
@@ -37,8 +43,7 @@ final case class CompileException(msg: String) extends Exception(msg)
  *
  * Property access re-attaches the element's columns by an equi-join on
  * id — the Spark analogue of the reference's RDMA point-reads
- * (`storage/vkvstore.cpp:153-166`); on the light lane, by lookups into
- * the [[AdjacencyStore]] instead. When the frontier came straight from
+ * (`storage/vkvstore.cpp:153-166`). When the frontier came straight from
  * the table scan the columns are already attached and no join happens,
  * which is how `g.V().has(...)` compiles to a plain pushed-down scan.
  */
@@ -70,34 +75,19 @@ object Compiler {
       // that can fan out or re-project the value (hops, values(),
       // select(), union(), barriers). Lets the per-value branch-filter
       // fast path skip its distinct shuffle.
-      distinctVal: Boolean = false,
-      // light lane (APC): an upper bound on this stream's rows, known
-      // for an index-seeded frontier and carried step by step
-      // ([[laneBound]]); None off the lane. Hops and attaches read the
-      // adjacency store while `bound × row width` fits the broadcast
-      // threshold ([[laneStore]]).
-      bound: Option[Long] = None,
-      // the graph's adjacency store: the hop multiplier (max degrees)
-      // and the lane's hop/attach lookups
-      adj: Option[AdjacencyStore] = None) {
+      distinctVal: Boolean = false) {
     /** Columns that must survive every transformation. */
     def auxCols: Seq[String] =
       history.keys.map(h => s"__as_$h").toSeq ++
         groupCol.toSeq ++ ordering.map(_._1)
   }
 
-  /** `light`: the query compiled on the light lane — index-seeded,
-    * every hop and attach a lookup into the adjacency store (no join
-    * against a graph table), and no step's rows depend on partition
-    * order — so it may run in a narrow AQE-off session ([[Graft]]). */
   final case class Result(df: DataFrame, kind: Kind,
                           ordering: Seq[(String, Boolean)],
-                          sideEffects: Map[String, (DataFrame, Kind)],
-                          light: Boolean = false)
-
-  /** A light-lane compile hit a step or join the lane cannot carry; the
-    * query recompiles on the plain path. */
-  private object LaneEnd extends scala.util.control.ControlThrowable
+                          sideEffects: Map[String, (DataFrame, Kind)])
+      extends Compiled {
+    def light: Boolean = false
+  }
 
   private var aliasCounter = 0
   private def freshAlias(prefix: String): String = synchronized {
@@ -114,59 +104,32 @@ object Compiler {
     // labels in the order they were recorded)
     val init = State(null, VertexKind, attached = false,
       scala.collection.immutable.ListMap.empty, Map.empty, None, Nil)
-    val out = steps.foldLeft(init)((s, step) => apply(graph, s, step))
+    val out = compileSub(graph, init, steps)
     Result(out.df, out.kind, out.ordering, out.sideEffects)
   }
 
-  /** Compile with a pre-computed vertex-id frontier (`id: LONG`) —
-    * used by the posting-list index fold, the Spark analogue of
-    * InitWithIndex (`expert/init_expert.hpp:199-234`). `bound` (an
-    * upper bound on the frontier's rows, from the fold's count map)
-    * tries the light lane first. */
+  /** Compile with a pre-computed frontier — vertex ids (`id: LONG`) or
+    * edges (`src, dst, label`) — used by the posting-list index fold,
+    * the Spark analogue of InitWithIndex
+    * (`expert/init_expert.hpp:199-234`, which serves both element
+    * types). */
   def compileSeeded(graph: GraphStore, frontier: DataFrame,
-                    steps: List[Step], bound: Option[Long],
-                    adj: Option[AdjacencyStore]): Result =
+                    isVertex: Boolean, steps: List[Step]): Result = {
     // posting lists hold one row per element (intersections/unions of
     // per-value postings of one key stay element-unique)
-    seeded(graph, State(frontier.select(col("id").as("__val")), VertexKind,
-      attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil, distinctVal = true), steps, bound, adj)
-
-  /** Compile with a pre-computed edge frontier (`src, dst, label`) —
-    * the edge side of InitWithIndex (`expert/init_expert.hpp:199-234`
-    * serves both element types). */
-  def compileSeededEdges(graph: GraphStore, frontier: DataFrame,
-                         steps: List[Step], bound: Option[Long],
-                         adj: Option[AdjacencyStore]): Result =
-    seeded(graph, State(frontier.select(edgeStruct().as("__val")), EdgeKind,
-      attached = false, scala.collection.immutable.ListMap.empty,
-      Map.empty, None, Nil, distinctVal = true), steps, bound, adj)
-
-  /** The light lane first (when a bound is known), else — or when the
-    * lane ends mid-query — the plain compile. A lane attempt is pure
-    * driver work (it ends BEFORE any eager step), so the retry runs no
-    * job, and a heavy query's plan is exactly the plain path's. The lane
-    * reads its seed in ONE partition (a narrow coalesce): the whole
-    * light query is then one task, with no exchange before its
-    * aggregate — APC's "light stays on one thread". */
-  private def seeded(graph: GraphStore, init: State, steps: List[Step],
-                     bound: Option[Long], adj: Option[AdjacencyStore]): Result = {
-    def run(s0: State): State =
-      steps.foldLeft(s0)((s, step) => apply(graph, s, step))
-    val lane =
-      if (bound.isEmpty) None
-      else try Some(run(init.copy(df = init.df.coalesce(1), bound = bound,
-        adj = adj)))
-      catch { case LaneEnd => None }
-    val out = lane.getOrElse(run(init))
-    Result(out.df, out.kind, out.ordering, out.sideEffects,
-      light = lane.isDefined)
+    val init = State(
+      frontier.select((if (isVertex) col("id") else edgeStruct()).as("__val")),
+      if (isVertex) VertexKind else EdgeKind, attached = false,
+      scala.collection.immutable.ListMap.empty, Map.empty, None, Nil,
+      distinctVal = true)
+    val out = compileSub(graph, init, steps)
+    Result(out.df, out.kind, out.ordering, out.sideEffects)
   }
 
   /** Compile a sub-traversal from an existing frontier. */
   private def compileSub(graph: GraphStore, from: State,
                          sub: List[Step]): State =
-    sub.foldLeft(from)((s, step) => apply(graph, s, step))
+    sub.foldLeft(from)((s, step) => applyStep(graph, s, step))
 
   // ------------------------------------------------------------------
   private def cmp(op: String, l: Column, r: Column): Column = op match {
@@ -183,35 +146,14 @@ object Compiler {
     struct(col(s"${prefix}src").as("src"), col(s"${prefix}dst").as("dst"),
       col(s"${prefix}label").as("label"))
 
-  /** The store a light-lane hop or attach reads, None off the lane. The
-    * lane's light/heavy test: the traverser side, `bound × row width`,
-    * must fit the graph session's `spark.sql.autoBroadcastJoinThreshold`.
-    * A lane step that does not fit, or a graph without a store, ends the
-    * lane. */
-  private def laneStore(graph: GraphStore, s: State): Option[AdjacencyStore] =
-    s.bound.map { b =>
-      val threshold = graph.vertices.sparkSession.sessionState.conf
-        .autoBroadcastJoinThreshold
-      // Spark's own row-size estimate: 8 bytes of row overhead + the
-      // columns' default sizes
-      val width = 8L + s.df.schema.defaultSize
-      if (threshold > 0 && b <= threshold / width)
-        s.adj.getOrElse(throw LaneEnd)
-      else throw LaneEnd
-    }
-
-  /** Re-attach element property columns (join on id, or store lookups
-    * on the light lane) if absent. */
+  /** Re-attach element property columns (join on id) if absent. */
   private def ensureAttached(graph: GraphStore, s: State): State = {
     if (s.attached) return s
     val left = s.df
-    (s.kind, laneStore(graph, s)) match {
-      case (_: ScalarKind, _) =>
+    s.kind match {
+      case _: ScalarKind =>
         throw CompileException("cannot read properties of a scalar stream")
-      case (kind, Some(adj)) =>
-        s.copy(df = adj.attach(left, s.auxCols, kind == VertexKind),
-          attached = true)
-      case (VertexKind, None) =>
+      case VertexKind =>
         val a = freshAlias("__v")
         val v = graph.vertices.alias(a)
         val joined = left.join(v, left("__val") === col(s"$a.id"))
@@ -219,7 +161,7 @@ object Compiler {
           (col(s"$a.label").as("label") +:
             graph.vertexKeys.map(k => col(s"$a.$k").as(k)))
         s.copy(df = joined.select(keep: _*), attached = true)
-      case (EdgeKind, None) =>
+      case EdgeKind =>
         val a = freshAlias("__e")
         val e = graph.edges.alias(a)
         val joined = left.join(e,
@@ -272,41 +214,6 @@ object Compiler {
       history = Map.empty, ordering = Nil, distinctVal = false)
 
   // ------------------------------------------------------------------
-  /** One step; on the light lane the step's output bound is decided
-    * first, so a step the lane cannot carry ends it before running. */
-  private def apply(graph: GraphStore, s: State, step: Step): State = {
-    val bound = s.bound.map(b => laneBound(s, step, b).getOrElse(throw LaneEnd))
-    applyStep(graph, s, step).copy(bound = bound)
-  }
-
-  /** The light lane's row bound after `step`, from the bound `b` before
-    * it; None ends the lane. Filters and per-traverser maps (at most one
-    * row out per row in) keep it, scalar aggregates emit one row, hops
-    * multiply it by the max degree, and an order-free dedup keeps it.
-    * Everything else ends the lane: steps whose rows depend on partition
-    * order, which the narrow session changes (limit/range, coin, order
-    * with its ties, a dedup that drops history or sort keys — it keeps
-    * an arbitrary row per key), steps that join without the hint
-    * (side-effect reads, branch filters), and the composite and eager
-    * steps (union, repeat). Edge attach keeps the bound: an edge
-    * IS its (src, dst, label) (see GraphStore). */
-  private def laneBound(s: State, step: Step, b: Long): Option[Long] = {
-    import Step._
-    def times(k: Long): Option[Long] =
-      if (k != 0 && b > Long.MaxValue / k) None else Some(b * k)
-    step match {
-      case _: Has | _: HasKey | _: HasValue | _: HasLabel | _: Is |
-           _: WherePred | _: WhereHistory | _: As | _: Label | _: Select |
-           _: PathStep | _: Aggregate | Values(Seq(_)) => Some(b)
-      case EtoV(Both) => times(2)
-      case _: EtoV => Some(b)
-      case VtoV(dir, labels) => s.adj.flatMap(a => times(a.hop(dir, labels)))
-      case VtoE(dir, labels) => s.adj.flatMap(a => times(a.hop(dir, labels)))
-      case _: Count | _: MathStep if s.groupCol.isEmpty => Some(1L)
-      case Dedup(Seq()) if s.auxCols.isEmpty => Some(b)
-      case _ => None
-    }
-  }
 
   private def applyStep(graph: GraphStore, s: State, step: Step): State = {
     import Step._
@@ -948,34 +855,29 @@ object Compiler {
   /** out/in/both × (V→V | V→E): the only mandatory shuffle in the
     * reference (`send_remote`, parser.cpp:1414) — here a plain equi-join
     * that Catalyst/AQE turns into broadcast or shuffle join as sizes
-    * dictate (on the light lane: an explode of adjacency-store
-    * lookups, no join). */
+    * dictate. */
   private def traverse(graph: GraphStore, s0: State, dir: Step.Dir,
                        labels: Seq[String], emitEdge: Boolean): State = {
     import Step._
     if (s0.kind != VertexKind)
       throw CompileException("out/in/both need a vertex stream")
     val s = detach(s0)
-    val df = laneStore(graph, s) match {
-      case Some(adj) => adj.traverse(s.df, s.auxCols, dir, labels, emitEdge)
-      case None =>
-        val a = freshAlias("__e")
-        var e = graph.edges.select(col("src"), col("dst"), col("label"))
-        if (labels.nonEmpty) e = e.filter(col("label").isin(labels: _*))
-        val ea = e.alias(a)
-        def hop(joinOn: String, emit: String): DataFrame = {
-          val joined = s.df.join(ea, s.df("__val") === col(s"$a.$joinOn"))
-          val newVal =
-            if (emitEdge) struct(col(s"$a.src").as("src"),
-              col(s"$a.dst").as("dst"), col(s"$a.label").as("label"))
-            else col(s"$a.$emit")
-          joined.select((newVal.as("__val") +: s.auxCols.map(col)): _*)
-        }
-        dir match {
-          case Out  => hop("src", "dst")
-          case In   => hop("dst", "src")
-          case Both => hop("src", "dst").unionByName(hop("dst", "src"))
-        }
+    val a = freshAlias("__e")
+    var e = graph.edges.select(col("src"), col("dst"), col("label"))
+    if (labels.nonEmpty) e = e.filter(col("label").isin(labels: _*))
+    val ea = e.alias(a)
+    def hop(joinOn: String, emit: String): DataFrame = {
+      val joined = s.df.join(ea, s.df("__val") === col(s"$a.$joinOn"))
+      val newVal =
+        if (emitEdge) struct(col(s"$a.src").as("src"),
+          col(s"$a.dst").as("dst"), col(s"$a.label").as("label"))
+        else col(s"$a.$emit")
+      joined.select((newVal.as("__val") +: s.auxCols.map(col)): _*)
+    }
+    val df = dir match {
+      case Out  => hop("src", "dst")
+      case In   => hop("dst", "src")
+      case Both => hop("src", "dst").unionByName(hop("dst", "src"))
     }
     s.copy(df = df, kind = if (emitEdge) EdgeKind else VertexKind,
       attached = false, distinctVal = false)

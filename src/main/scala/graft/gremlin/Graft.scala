@@ -1,6 +1,7 @@
 package graft.gremlin
 
-import org.apache.spark.sql.{DataFrame, SessionRebind}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.NarrowSession
 import graft.sources.GraphStore
@@ -23,7 +24,8 @@ import graft.sources.GraphStore
  *
  * Replaces the reference's client/master/worker query lifecycle
  * (Grasper `driver/client.cpp`, `driver/worker.hpp:264-347`): parse →
- * reorder → compile → Catalyst. The ZMQ/RDMA plumbing has no Spark
+ * reorder → compile → Catalyst, or — for a light query — the driver's
+ * step interpreter ([[LightLane]]). The ZMQ/RDMA plumbing has no Spark
  * analogue to build — `collect()` is the result channel.
  */
 final case class Graft(graph: GraphStore) {
@@ -37,7 +39,7 @@ final case class Graft(graph: GraphStore) {
     * `stealing`, …) are recorded but subsumed by Catalyst/AQE. */
   @volatile var config: Map[String, String] = Map.empty
 
-  /** The light lane's adjacency store: its hops, attaches and max
+  /** The light lane's adjacency store: its hops, property reads and max
     * degrees. Built once, at the first `BuildIndex` DDL (indexes are
     * what seed the lane), never at compile; None before that, and for
     * good when the graph does not fit the store
@@ -78,26 +80,27 @@ final case class Graft(graph: GraphStore) {
     * vertices AND edges (`expert/init_expert.hpp:199-234`). Gating is
     * pure driver arithmetic over the build-time count map: compiling
     * never runs a Spark job. The fold's upper bound on the seeded
-    * frontier opens the light lane (APC, see [[finish]]). */
-  def compile(query: String): Compiler.Result = {
+    * frontier opens the light lane (APC, [[LightLane.admit]]); a query
+    * the lane does not admit compiles to a Catalyst plan. */
+  def compile(query: String): Compiled = {
     val steps = plannedSteps(query)
-    steps match {
-      case Step.V(Seq()) :: rest if enabled("indexing") =>
-        foldIndex(isVertex = true, rest) match {
-          case Some(((frontier, bound), remaining)) =>
-            Compiler.compileSeeded(graph, frontier, remaining, Some(bound),
-              adjacency)
-          case scala.None => Compiler.compile(graph, steps)
-        }
-      case Step.E() :: rest if enabled("indexing") =>
-        foldIndex(isVertex = false, rest) match {
-          case Some(((frontier, bound), remaining)) =>
-            Compiler.compileSeededEdges(graph, frontier, remaining,
-              Some(bound), adjacency)
-          case scala.None => Compiler.compile(graph, steps)
-        }
-      case _ => Compiler.compile(graph, steps)
+    val seed = steps match {
+      case Step.V(Seq()) :: rest if enabled("indexing") => Some((true, rest))
+      case Step.E() :: rest if enabled("indexing") => Some((false, rest))
+      case _ => scala.None
     }
+    seed.flatMap { case (isVertex, rest) =>
+      foldIndex(isVertex, rest).map { case ((folded, bound), remaining) =>
+        LightLane.admit(graph, adjacency, index, isVertex, folded, bound,
+          remaining).getOrElse {
+          val joinCols = if (isVertex) Seq("id") else Seq("src", "dst", "label")
+          val frontier = folded
+            .map(f => index.frontier(isVertex, f._1, f._2))
+            .reduce((a, b) => a.join(b, joinCols, "left_semi"))
+          Compiler.compileSeeded(graph, frontier, isVertex, remaining)
+        }
+      }
+    }.getOrElse(Compiler.compile(graph, steps))
   }
 
   /** Parse + (config-gated) reorder — `SetConfig('step_reorder',
@@ -121,11 +124,11 @@ final case class Graft(graph: GraphStore) {
     * `core/parser.hpp:43-46`). `hasLabel` folds as a WITHIN predicate
     * on the label key (`parser.cpp:1060-1081`) — selectivity-gated but
     * outside the minCount bookkeeping, like the reference. Returns the
-    * seeded frontier with an upper bound on its rows (the smallest
-    * folded count: the frontier intersects the folded postings), and
-    * the steps left to compile. */
+    * folded (key, predicate) pairs — the seeded frontier intersects
+    * their postings — with an upper bound on its rows (the smallest
+    * folded count), and the steps left to compile. */
   private[gremlin] def foldIndex(isVertex: Boolean, rest: List[Step])
-      : Option[((DataFrame, Long), List[Step])] = {
+      : Option[((Seq[(String, Pred)], Long), List[Step])] = {
     val IndexRatio = 3L
     val isLeading: Step => Boolean = {
       case _: Step.Has | _: Step.HasKey | _: Step.HasLabel |
@@ -170,28 +173,24 @@ final case class Graft(graph: GraphStore) {
     }
 
     if (folded.isEmpty) scala.None
-    else {
-      val joinCols = if (isVertex) Seq("id") else Seq("src", "dst", "label")
-      val frontier = folded
-        .map(f => index.frontier(isVertex, f._1, f._2))
-        .reduce((a, b) => a.join(b, joinCols, "left_semi"))
-      Some(((frontier, folded.map(_._3).min), (kept ++ tail).toList))
-    }
+    else Some(((folded.map(f => (f._1, f._2)), folded.map(_._3).min),
+      (kept ++ tail).toList))
   }
 
   /** The query as a user-facing DataFrame (ordering applied, internal
-    * columns mapped to stable names). */
-  def df(query: String): DataFrame = finish(compile(query))
+    * columns mapped to stable names). A light query's rows are already
+    * computed: they come back as a local relation in the graph
+    * session's width-1 child, whose `collect()` runs no job. */
+  def df(query: String): DataFrame = compile(query) match {
+    case p: LightLane.Plan =>
+      NarrowSession(graph.vertices.sparkSession, 1)
+        .createDataFrame(LightLane.run(p).map(Row.fromSeq).asJava, p.schema)
+    case r: Compiler.Result => finish(r)
+  }
 
-  /** APC's "light stays single-threaded": a light query's finished plan
-    * is re-planned in the graph session's width-1 AQE-off child — one
-    * driver job per query (a postings scan, adjacency-store lookups and
-    * the aggregate), instead of one per exchange under AQE. The cached
-    * postings are found through the shared CacheManager; nothing is
-    * re-cached. Heavy queries keep the parent session. */
   private def finish(r: Compiler.Result): DataFrame = {
     val ordered = Compiler.applyOrdering(r.df, r.ordering)
-    val out = r.kind match {
+    r.kind match {
       case VertexKind => ordered.select(col("__val").as("id"))
       case EdgeKind => ordered.select(
         col("__val").getField("src").as("src"),
@@ -205,36 +204,39 @@ final case class Graft(graph: GraphStore) {
         case _ => ordered.select(col("__val").as("value"))
       }
     }
-    if (r.light)
-      SessionRebind(out, NarrowSession(graph.vertices.sparkSession, 1))
-    else out
   }
 
   /** Console-parity output: one "=>v" string per result row, like the
     * reference client (`docs/Tutorial.md:291-309`); DDL returns its
-    * status line. Collects to the driver — final-result sized only. */
+    * status line. A light query renders its driver rows; any other
+    * collects to the driver — final-result sized only. */
   def strings(query: String): Seq[String] = {
     ddl(query).foreach(status => return Seq(status))
-    val out = df(query)
-    val rows = out.collect()
-    val isGroup = out.columns.headOption.contains("key")
-    rows.toSeq.map { row =>
-      val rendered =
-        if (isGroup)
+    compile(query) match {
+      case p: LightLane.Plan => LightLane.run(p).map(Graft.render)
+      case r: Compiler.Result =>
+        val out = finish(r)
+        val rows = out.collect()
+        if (out.columns.headOption.contains("key"))
           // reference group()/groupCount() console format: "key:[v1, v2]"
           // / "key:count" (barrier_expert.hpp:685-716)
-          // NB: scala.collection.Seq, not the 2.13 immutable default —
-          // Spark hands back mutable.ArraySeq for array columns
-          row.get(0).toString + ":" + (row.get(1) match {
-            case s: scala.collection.Seq[_] => s.mkString("[", ", ", "]")
-            case v => v.toString
-          })
-        else row.toSeq.map {
-          case null => ""
-          case s: scala.collection.Seq[_] => s.mkString("[", ", ", "]")
-          case v => v.toString
-        }.mkString(", ")
-      s"=>$rendered"
+          rows.toSeq.map(row => "=>" + row.get(0).toString + ":" +
+            Graft.text(row.get(1)))
+        else rows.toSeq.map(row => Graft.render(row.toSeq))
     }
+  }
+}
+
+object Graft {
+  /** A console row: its values joined by ", " after "=>". */
+  private def render(row: Seq[Any]): String =
+    row.map(text).mkString("=>", ", ", "")
+
+  // NB: scala.collection.Seq, not the 2.13 immutable default — Spark
+  // hands back mutable.ArraySeq for array columns
+  private def text(v: Any): String = v match {
+    case null => ""
+    case s: scala.collection.Seq[_] => s.mkString("[", ", ", "]")
+    case v => v.toString
   }
 }

@@ -1,7 +1,8 @@
 package graft.gremlin
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sources.GraphStore
 
 /**
@@ -23,6 +24,13 @@ import graft.sources.GraphStore
  *    Spark job runs during query compilation.
  *  - noKey: ids whose key is null (serves `hasNot(key)`), plus its
  *    driver-held count.
+ *  - driver: the same postings collected to the driver at BUILD time
+ *    ([[IndexStore.Postings]]), which seed the light lane
+ *    ([[LightLane]]) with no Spark job. Kept only when their estimated
+ *    bytes fit the graph session's `spark.sql.maxBroadcastTableSize`
+ *    (the adjacency store's gate), the key's type is one the driver
+ *    compares like Catalyst (int, long, double, string) and no element
+ *    id is null.
  *
  * Unlike the reference's single-node `count_map` (one entry per
  * DISTINCT value — O(cardinality) driver memory, fine at its scale,
@@ -50,7 +58,8 @@ final class IndexStore {
   final case class Index(postings: DataFrame, noKey: DataFrame,
                          counts: Map[Any, Long], noKeyCount: Long,
                          total: Long, residualTotal: Long,
-                         residualMax: Long) {
+                         residualMax: Long,
+                         driver: Option[IndexStore.Postings]) {
     private def boundFor(v: Any): Long =
       counts.getOrElse(v, if (residualTotal > 0) residualMax else 0L)
     /** Upper bound on elements matching `pred` (exact when the full
@@ -119,6 +128,8 @@ final class IndexStore {
       }
     val noKeyCount = noKey.count()
     val total = nonNullTotal + noKeyCount
+    val driver = IndexStore.Postings.collect(posting, noKey, isVertex,
+      nonNullTotal, noKeyCount, total * SelectivityGate)
     // release the replaced index's cached blocks only AFTER the new one
     // materialized — a failed rebuild must not leave a registered index
     // serving uncached postings. The swap is locked: concurrent DDLs
@@ -128,7 +139,7 @@ final class IndexStore {
         old.postings.unpersist(); old.noKey.unpersist()
       }
       indexes += (isVertex, key) -> Index(posting, noKey, counts,
-        noKeyCount, total, residualTotal, residualMax)
+        noKeyCount, total, residualTotal, residualMax, driver)
     }
   }
 
@@ -168,4 +179,84 @@ object IndexStore {
   /** Above the cap, collect values with count >= total/this — caps the
     * driver map at ~this many entries regardless of cardinality. */
   val HeavyHitterDenom = 1000L
+
+  /** An index's postings on the driver: the distinct non-null values in
+    * Catalyst's order ([[PredEval.compare]]), each value's elements (a
+    * vertex id, or a [[LightLane.Edge]], one per table row), and the
+    * no-key elements — those only when `hasNot` can pass the
+    * selectivity gate, i.e. fewer than `gate` of them. */
+  final class Postings private (values: Array[Any], offsets: Array[Int],
+                                elems: Array[Any],
+                                noKey: Option[Array[Any]]) {
+    /** True when the no-key elements were kept: `hasNot` can seed. */
+    def servesNoKey: Boolean = noKey.isDefined
+
+    /** The elements matching `pred` (for `hasNot`, when
+      * [[servesNoKey]]). */
+    def select(pred: Pred): Seq[Any] = pred match {
+      case Pred.None => noKey.fold(Seq.empty[Any])(_.toSeq)
+      case Pred.Any => elems.toSeq
+      case Pred.Eq(v) => equal(v.value).flatMap(slice)
+      case Pred.Within(vs) =>
+        PredEval.inKeys(vs).flatMap(equal).distinct.flatMap(slice)
+      case p => values.indices.filter(i => p.eval(values(i))).flatMap(slice)
+    }
+
+    private def slice(i: Int): Seq[Any] =
+      elems.slice(offsets(i), offsets(i + 1)).toSeq
+
+    /** The values equal to `key`, by binary search: a run of them, as
+      * several longs can equal one double. */
+    private def equal(key: Any): Range = {
+      def first(above: Int => Boolean): Int = {
+        var (lo, hi) = (0, values.length)
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (above(mid)) hi = mid else lo = mid + 1
+        }
+        lo
+      }
+      def c(i: Int): Int = PredEval.compare(values(i), key).get
+      first(c(_) >= 0) until first(c(_) > 0)
+    }
+  }
+
+  object Postings {
+    /** Catalyst's order over one column's values. */
+    private val order: Ordering[Any] = (a, b) => PredEval.compare(a, b).get
+
+    /** Collect an index's postings `(value, id columns…)` and no-key ids
+      * (the no-key ones only when fewer than `gate`), or None when they
+      * do not fit the session's `spark.sql.maxBroadcastTableSize`, the
+      * value type is not int, long, double or string, or an id is null.
+      * Runs Spark jobs: BuildIndex time only. */
+    def collect(posting: DataFrame, noKey: DataFrame, isVertex: Boolean,
+                rows: Long, noKeyRows: Long, gate: Double): Option[Postings] = {
+      val keepNoKey = noKeyRows < gate
+      val kept = rows + (if (keepNoKey) noKeyRows else 0L)
+      val conf = posting.sparkSession.sessionState.conf
+      val idTypes =
+        if (isVertex) Seq(LongType) else Seq(LongType, LongType, StringType)
+      if (!AdjacencyStore.Held(posting.schema("value").dataType) ||
+          posting.schema.fields.drop(1).map(_.dataType).toSeq != idTypes ||
+          kept * (8L + posting.schema.defaultSize) >
+            conf.maxBroadcastTableSizeInBytes)
+        return scala.None
+      def elem(r: Row, o: Int): Option[Any] =
+        if ((o until r.length).exists(r.isNullAt)) scala.None
+        else Some(if (isVertex) r.getLong(o)
+          else LightLane.Edge(r.getLong(o), r.getLong(o + 1), r.getString(o + 2)))
+      val sorted = posting.collect().sortBy(_.get(0))(order)
+      val elems = sorted.map(elem(_, 1))
+      val none =
+        if (keepNoKey) noKey.collect().map(elem(_, 0)) else Array.empty[Option[Any]]
+      if ((elems ++ none).exists(_.isEmpty)) return scala.None
+      // runs of equal values (−0.0 and 0.0 are one run, like a group by)
+      val starts = sorted.indices.filter(i =>
+        i == 0 || order.compare(sorted(i - 1).get(0), sorted(i).get(0)) != 0)
+      Some(new Postings(starts.map(sorted(_).get(0)).toArray,
+        (starts :+ sorted.length).toArray, elems.map(_.get),
+        if (keepNoKey) Some(none.map(_.get)) else scala.None))
+    }
+  }
 }

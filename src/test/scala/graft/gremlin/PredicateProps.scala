@@ -154,6 +154,34 @@ object PredicateProps extends Properties("gremlin") {
       evalAgrees[String](vals, pred, _.toDF("id", "v"))
     }
 
+  // ---- Pred.eval against Catalyst's pred(lit(v)) where the two
+  // orders part ways: strings around the supplementary planes (UTF-8
+  // byte order vs UTF-16 code units) and longs near 2^53 (exact vs
+  // through a double) ----
+
+  private val strs: List[Any] = List("", "a", "a\uFFFD", "\uE000",
+    "\uFFFD", "\uD83D\uDE00", "a\uD83D\uDE00", "\uD800\uDC00")
+  private val nearLongs: List[Any] = (-3L to 3L).map((1L << 53) + _).toList
+
+  /** Catalyst's answer to `pred(lit(v))` for each `v`: null is false. */
+  private def catalyst(vs: List[Any], pred: Pred): List[Boolean] = {
+    val row = Seq(1).toDF("one").select(vs.map(v =>
+      pred(org.apache.spark.sql.functions.lit(v))): _*).head()
+    vs.indices.map(i => !row.isNullAt(i) && row.getBoolean(i)).toList
+  }
+
+  property("Pred.eval agrees with Catalyst on strings outside the BMP") =
+    forAll(predAdtGen(Gen.oneOf(strs).map(v => Lit.S(v.toString)))) { pred =>
+      strs.map(pred.eval) == catalyst(strs, pred)
+    }
+
+  property("Pred.eval agrees with Catalyst on longs near 2^53") =
+    forAll(predAdtGen(Gen.frequency(
+      3 -> Gen.chooseNum(-1L, 1L).map(d => Lit.I((1L << 53) + d)),
+      1 -> Gen.oneOf(-2.0, 0.0, 2.0).map(d => Lit.D(9007199254740992.0 + d))))) {
+      pred => nearLongs.map(pred.eval) == catalyst(nearLongs, pred)
+    }
+
   property("Reorder preserves semantics") =
     forAll(agesGen, predGen, predGen) { (ages, p1, p2) =>
       val (g, _) = graphOf(ages)
